@@ -554,7 +554,7 @@ def multimodal_asset_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _stage_wav_dir(sf_dir: str, doc_ids: list[int]) -> str:
     """Idempotently stage a directory of standalone .wav files (the
-    raw-asset-lake layout: one object per asset) under /tmp — the
+    raw-asset-lake layout: one object per asset) under scratch — the
     read-only testdata must not be touched. Fixture staging, not the
     measured operator; same convention as the bucketed/clustered
     layout builders in sources/.
@@ -567,12 +567,13 @@ def _stage_wav_dir(sf_dir: str, doc_ids: list[int]) -> str:
     import hashlib
     import os
 
+    from ..scratch import scratch_dir
+
     version = hashlib.md5(
         (os.path.abspath(sf_dir) + "|" + ",".join(map(str, doc_ids))
          + "|" + wav_pcm_bytes(max(doc_ids, default=0)).hex())
         .encode()).hexdigest()[:16]
-    d = os.path.join("/tmp", "spark_graft_media", version)
-    os.makedirs(d, exist_ok=True)
+    d = scratch_dir("media", sf_dir, version=version)
     expected = {f"doc_{i:06d}.wav" for i in doc_ids}
     existing = {f for f in os.listdir(d) if f.endswith(".wav")}
     if existing != expected:

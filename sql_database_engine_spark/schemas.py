@@ -1,16 +1,19 @@
 """Explicit schemas for every table the engine knows about.
 
 The reference compiles its single schema into the binary
-(`/root/reference/db.cpp:41-46`); our analog is this module: one
-declared ``StructType`` per table, used to validate what we read and
-to construct what we write. Nothing in the engine relies on schema
-inference.
+(`db.cpp:41-46`); our analog is this module: one declared
+``StructType`` per table. ``USERS`` is the schema the REPL store
+writes. The driver testdata schemas describe what
+``catalog.load_table`` returns: the types Spark infers from the
+parquet footers, after the catalog's canonicalization. Reads still
+infer their schema; ``tests/test_sources.py`` pins these declarations
+to the loaded tables so the two cannot drift apart silently.
 
-The driver testdata schemas were dumped from the actual parquet
-footers (see FIXTURES.md). ``events.ts`` is physically
-INT64 TIMESTAMP(NANOS) which Spark 4 cannot map — the catalog reads it
-as a long and converts to a microsecond timestamp, so the *logical*
-schema below declares ``TimestampType``.
+``o_orderdate`` and ``l_shipdate`` are stored as ``timestamp[us]``
+without a UTC annotation, which Spark reads as ``TIMESTAMP_NTZ``.
+``events.ts`` has shipped both as that and as INT64
+TIMESTAMP(NANOS); the catalog normalizes either encoding to a
+microsecond ``TimestampType``, which is what is declared here.
 """
 
 from __future__ import annotations
@@ -77,7 +80,7 @@ ORDERS = T.StructType([
     T.StructField("o_custkey", T.LongType(), True),
     T.StructField("o_orderstatus", T.StringType(), True),
     T.StructField("o_totalprice", T.DoubleType(), True),
-    T.StructField("o_orderdate", T.TimestampType(), True),
+    T.StructField("o_orderdate", T.TimestampNTZType(), True),
     T.StructField("o_orderpriority", T.StringType(), True),
 ])
 
@@ -92,7 +95,7 @@ LINEITEM = T.StructType([
     T.StructField("l_tax", T.DoubleType(), True),
     T.StructField("l_returnflag", T.StringType(), True),
     T.StructField("l_linestatus", T.StringType(), True),
-    T.StructField("l_shipdate", T.TimestampType(), True),
+    T.StructField("l_shipdate", T.TimestampNTZType(), True),
 ])
 
 EVENTS = T.StructType([

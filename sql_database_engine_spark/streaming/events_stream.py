@@ -180,7 +180,7 @@ def backlog_state_partitions(sf_dir: str) -> int:
     stores per partition), so oversharding is pure commit overhead:
     measured at sf0.1 the click⋈purchase drain is 5.7 s at 32
     partitions vs 1.9 s at 4 — same 371 rows (layout invariance is
-    proven registry-wide by tools/determinism_sweep.py). Rule:
+    proven registry-wide by tools/sweep.py --replica layout). Rule:
     ~8 MB of backlog per state partition, clamped to [2, cores] —
     at a 100 TB backlog the clamp lands at cluster parallelism, at
     test SFs it stops paying for empty state stores.

@@ -1,5 +1,6 @@
 """Empty-input semantics pins — one representative per class fixed in
-the round-5 empty_sweep audit (tools/empty_sweep.py; SWEEPS/r5d_*).
+the round-5 empty_sweep audit (now ``tools/sweep.py --replica
+empty:facts|empty:all``; SWEEPS/r5d_*).
 
 At 100 TB zero-row inputs are routine (partition-pruned-to-nothing
 scans, beyond-range filters, empty ingest batches), and the audit

@@ -224,8 +224,8 @@ def _int_expr(rng: random.Random) -> str:
 
 def _str_expr(rng: random.Random) -> str:
     """Random string scalar expression over the low-cardinality ASCII
-    flag columns (multibyte semantics live in unicode_sweep; this
-    class pins the function surface itself)."""
+    flag columns (multibyte semantics live in the sweep's unicode
+    replica; this class pins the function surface itself)."""
     col = rng.choice(list(_STR_COLS))
     kind = rng.randrange(5)
     if kind == 0:

@@ -11,10 +11,10 @@ enforces, exercised in the regime the fixtures never reach.
 
 from __future__ import annotations
 
-import math
 import os
 
 import pytest
+from sweep import duck_rows, spark_rows
 
 from tests.conftest import SF_ORACLE
 
@@ -72,14 +72,6 @@ def _stage_replica(tmp_path) -> str:
     return replica
 
 
-def _canon(v):
-    if v is None:
-        return "<NULL>"
-    if isinstance(v, float):
-        return "NaN" if math.isnan(v) else repr(v)
-    return str(v)
-
-
 def test_nonfinite_audit_counts_and_cross_engine_agreement(spark, tmp_path):
     import duckdb
 
@@ -87,15 +79,11 @@ def test_nonfinite_audit_counts_and_cross_engine_agreement(spark, tmp_path):
     operators.load_all()
 
     replica = _stage_replica(tmp_path)
-    sdf = operators.QUERIES["dq_nonfinite_audit"](spark, replica)
-    cols = sorted(sdf.columns)
-    a = sorted(tuple(_canon(r[c]) for c in cols) for r in sdf.collect())
+    a, _ = spark_rows(operators.QUERIES["dq_nonfinite_audit"](spark, replica))
 
     con = duckdb.connect()
     register_duck_views(con, replica)
-    res = con.sql(operators.ORACLES["dq_nonfinite_audit"])
-    order = sorted(range(len(res.columns)), key=lambda i: res.columns[i])
-    b = sorted(tuple(_canon(r[i]) for i in order) for r in res.fetchall())
+    b, _ = duck_rows(con, operators.ORACLES["dq_nonfinite_audit"])
     con.close()
 
     assert a == b, f"engines diverge on poisoned replica:\n{a}\n{b}"

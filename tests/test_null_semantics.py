@@ -4,8 +4,8 @@ The shipped fixtures contain zero NULLs, so the ordinary oracle
 differential can never exercise a null code path (the round-5
 null_sweep audit found 42 measures-tier + 34 payload-tier divergences
 that way). This module keeps one representative query per FIXED CLASS
-permanently under test against the null-injected replica — the audit
-tool (`tools/null_sweep.py`) remains the registry-wide sweep; these
+permanently under test against the null-injected replica — the
+registry-wide sweep remains `tools/sweep.py --replica null:full`; these
 pins make the classes fail fast in `pytest` between audit runs.
 
 Classes covered (one query each):
@@ -33,13 +33,7 @@ merge split (scd2_merge_batch).
 
 from __future__ import annotations
 
-import os
-import sys
-
 import pytest
-
-ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, os.path.join(ROOT, "tools"))
 
 SF = "/root/testdata/sf0.001"
 
@@ -64,13 +58,12 @@ PINNED = [
 @pytest.fixture(scope="module")
 def replica():
     """Full-tier null-injected replica (staged once, reused)."""
-    from null_sweep import stage_replica
+    from sweep import KINDS, stage_replica
 
-    path, proof = stage_replica(SF, "full", ROOT)
+    path, proof = stage_replica("null:full", SF)
     # Vacuity guard: the audit-of-the-audit rule — every injected
     # column must actually contain nulls and row counts must match.
-    assert all(p["rows_src"] == p["rows_dst"] for p in proof.values())
-    assert all(n > 0 for p in proof.values() for n in p["nulls"].values())
+    assert KINDS["null:full"].perturbed(proof), proof
     return path
 
 
@@ -88,7 +81,7 @@ def duck_replica(replica):
 
 @pytest.mark.parametrize("name", PINNED)
 def test_null_class_pin(spark, duck_replica, replica, name):
-    from cert_sweep import duck_rows, spark_rows, value_hash
+    from sweep import duck_rows, spark_rows, value_hash
 
     from sql_database_engine_spark import operators
     operators.load_all()
@@ -120,7 +113,8 @@ def test_rolling_median_all_null_frame(spark, tmp_path):
     import duckdb
     import pandas as pd
 
-    from cert_sweep import spark_rows, value_hash
+    from sweep import duck_rows, spark_rows, value_hash
+
     from sql_database_engine_spark import operators
     operators.load_all()
 
@@ -146,7 +140,6 @@ def test_rolling_median_all_null_frame(spark, tmp_path):
     con = duckdb.connect()
     con.execute(f"CREATE VIEW orders AS SELECT * FROM "
                 f"read_parquet('{tmp_path / 'orders.parquet'}')")
-    from cert_sweep import duck_rows
     b, b_cols = duck_rows(
         con, operators.ORACLES["window_rolling_median_7d"])
     con.close()
@@ -166,7 +159,7 @@ def test_scd2_merge_batch_null_ts_symmetric(spark, tmp_path):
     import duckdb
     import pandas as pd
 
-    from cert_sweep import duck_rows, spark_rows, value_hash
+    from sweep import duck_rows, spark_rows, value_hash
     from sql_database_engine_spark import operators
     operators.load_all()
 

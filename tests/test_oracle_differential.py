@@ -9,35 +9,10 @@ bit-for-bit, which is the engine's stated determinism contract.
 
 from __future__ import annotations
 
-import math
-
 import pytest
+from sweep import duck_rows, spark_rows
 
 from .conftest import SF_ORACLE
-
-
-def _canon(v) -> str:
-    if v is None:
-        return "<NULL>"
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        return repr(v)  # shortest round-trip repr: bit-exact comparison
-    return str(v)
-
-
-def _spark_rows(df):
-    cols = sorted(df.columns)
-    return sorted(tuple(_canon(r[c]) for c in cols) for r in df.collect())
-
-
-def _duck_rows(con, sql):
-    res = con.sql(sql)
-    cols = res.columns
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    rows = res.fetchall()
-    return sorted(tuple(_canon(r[i]) for i in order) for r in rows), \
-        [cols[i] for i in order]
 
 
 def _all_queries():
@@ -53,10 +28,10 @@ QUERIES, ORACLES = _all_queries()
 def test_oracle_match(name, spark, duck):
     q = QUERIES[name]
     df = q(spark, SF_ORACLE)
-    expected, oracle_cols = _duck_rows(duck, ORACLES[name])
+    expected, oracle_cols = duck_rows(duck, ORACLES[name])
     assert sorted(df.columns) == oracle_cols, (
         f"{name}: column mismatch spark={sorted(df.columns)} duck={oracle_cols}")
-    actual = _spark_rows(df)
+    actual, _ = spark_rows(df)
     assert len(actual) == len(expected), (
         f"{name}: row count {len(actual)} != {len(expected)}")
     mismatches = [(a, e) for a, e in zip(actual, expected) if a != e]

@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from sql_database_engine_spark import schemas
 from sql_database_engine_spark.sources.readers import read_source, write_sink
+from sql_database_engine_spark.tables import TABLE_NAMES
 from .conftest import SF_SMOKE
 
 
@@ -104,6 +105,19 @@ def test_table_names_sync_with_schema_registry():
     from sql_database_engine_spark.tables import TABLE_NAMES
 
     assert TABLE_NAMES == tuple(schemas.TESTDATA_SCHEMAS)
+
+
+@pytest.mark.parametrize("table", TABLE_NAMES)
+def test_declared_schema_matches_loaded_table(spark, table):
+    """Every declared testdata schema names the columns and types
+    ``catalog.load_table`` actually returns (nullability aside), so a
+    declaration that drifts from the parquet files fails here."""
+    from sql_database_engine_spark import catalog
+
+    loaded = catalog.load_table(spark, SF_SMOKE, table).schema
+    assert ([(f.name, f.dataType) for f in loaded]
+            == [(f.name, f.dataType)
+                for f in schemas.TESTDATA_SCHEMAS[table]])
 
 
 def test_tables_module_is_spark_free():

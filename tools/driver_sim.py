@@ -16,16 +16,15 @@ conf-dependence regression can never reach the real gate first.
 Usage:
     python tools/driver_sim.py [--sf /root/testdata/sf0.01] [--n 50]
 
-Artifacts stream to SWEEPS/{tag}.jsonl exactly like cert_sweep.
+Artifacts stream to SWEEPS/{tag}.jsonl with the record fields of
+tools/sweep.py.
 """
 
 from __future__ import annotations
 
 import argparse
-import json
 import os
 import sys
-import time
 
 
 def main() -> int:
@@ -61,7 +60,8 @@ def main() -> int:
     register_duck_views(con, args.sf)
 
     import __spark_entry__ as entry
-    from cert_sweep import duck_rows, spark_rows, value_hash
+    from sweep import (check, duck_rows, run_queries, spark_rows,
+                       write_summary)
 
     # The driver's smoke check first: entry() must run and return rows
     # with a stable schema.
@@ -71,51 +71,20 @@ def main() -> int:
 
     queries = entry.queries()
     oracles = entry.oracle_sql()
-    names = list(queries)[:args.n]
 
-    n_pass = n_fail = 0
-    t_start = time.time()
+    def step(name: str) -> dict:
+        # rows-only entries get the driver's weaker check: they must
+        # run (RAN_ROWS_ONLY)
+        return {**check(name,
+                        lambda: spark_rows(queries[name](spark, args.sf)),
+                        (lambda: duck_rows(con, oracles[name]))
+                        if name in oracles else None),
+                "sf": args.sf}
+
     with open(jsonl_path, "w") as out:
-        for i, name in enumerate(names):
-            rec: dict = {"query": name, "sf": args.sf,
-                         "oracled": name in oracles}
-            t0 = time.time()
-            try:
-                a, a_cols = spark_rows(queries[name](spark, args.sf))
-                rec.update(spark_rows=len(a), spark_cols=a_cols,
-                           spark_hash=value_hash(a))
-                if name in oracles:
-                    b, b_cols = duck_rows(con, oracles[name])
-                    rec.update(oracle_rows=len(b), oracle_cols=b_cols,
-                               oracle_hash=value_hash(b))
-                    ok = (a_cols == b_cols and len(a) == len(b)
-                          and rec["spark_hash"] == rec["oracle_hash"])
-                    if not ok:
-                        rec["mismatch"] = {
-                            "rows_only_in_spark": sorted(set(a) - set(b))[:20],
-                            "rows_only_in_oracle": sorted(set(b) - set(a))[:20],
-                        }
-                else:
-                    ok = True  # driver records a weaker rows-only check
-                rec["status"] = "PASS" if ok else "FAIL"
-                rec["elapsed_s"] = round(time.time() - t0, 3)
-            except Exception as exc:  # noqa: BLE001 — artifact, not control flow
-                rec.update(status="ERROR", error=repr(exc)[:2000],
-                           elapsed_s=round(time.time() - t0, 3))
-            n_pass += rec["status"] == "PASS"
-            n_fail += rec["status"] != "PASS"
-            out.write(json.dumps(rec) + "\n")
-            out.flush()
-            os.fsync(out.fileno())
-            print(f"[{i+1}/{len(names)}] {rec['status']} {name} "
-                  f"{rec.get('elapsed_s')}s", flush=True)
-    summary = {"tag": args.tag, "sf": args.sf, "n_queries": len(names),
-               "n_pass": n_pass, "n_fail": n_fail,
-               "total_s": round(time.time() - t_start, 1)}
-    with open(summary_path, "w") as f:
-        json.dump(summary, f, indent=1)
-    print(json.dumps(summary), flush=True)
-    return 1 if n_fail else 0
+        counts = run_queries(out, list(queries)[:args.n], step)
+    write_summary(summary_path, {"tag": args.tag, "sf": args.sf, **counts})
+    return 1 if counts["n_fail"] else 0
 
 
 if __name__ == "__main__":

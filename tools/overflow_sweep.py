@@ -22,7 +22,6 @@ Results are recorded in ROUND{N}_NOTES.md per the measurement policy.
 from __future__ import annotations
 
 import argparse
-import math
 import os
 import shutil
 import sys
@@ -240,14 +239,6 @@ def build_dedup_scaled_dir(src_sf: str, factor: int) -> str:
     return out
 
 
-def canon(v) -> str:
-    if v is None:
-        return "<NULL>"
-    if isinstance(v, float):
-        return "NaN" if math.isnan(v) else repr(v)
-    return str(v)
-
-
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--factor", type=int, default=10)
@@ -273,14 +264,16 @@ def main() -> int:
 
     sys.path.insert(0, os.path.dirname(os.path.dirname(
         os.path.abspath(__file__))))
+    from sweep import duck_rows, spark_rows
+
     from sql_database_engine_spark import operators as ops
     from sql_database_engine_spark.session import get_spark
+    from sql_database_engine_spark.tables import register_duck_views
 
     ops.load_all()
     spark = get_spark("overflow-sweep")
     con = duckdb.connect()
-    for t in list(FACTS) + DIMS:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{scaled}/{t}.parquet'")
+    register_duck_views(con, scaled)
 
     names = args.queries or (
         DEDUP_COHORT if args.dedup else ANN_COHORT if args.ann else COHORT)
@@ -336,14 +329,8 @@ def main() -> int:
     for name in names:
         t0 = time.perf_counter()
         df = ops.QUERIES[name](spark, scaled)
-        cols = sorted(df.columns)
-        actual = sorted(tuple(canon(r[c]) for c in cols)
-                        for r in df.collect())
-        res = con.sql(ops.ORACLES[name])
-        order = sorted(range(len(res.columns)),
-                       key=lambda i: res.columns[i])
-        expected = sorted(tuple(canon(r[i]) for i in order)
-                          for r in res.fetchall())
+        actual, _ = spark_rows(df)
+        expected, _ = duck_rows(con, ops.ORACLES[name])
         ok = actual == expected
         dt = time.perf_counter() - t0
         density = ""

@@ -1,21 +1,23 @@
 #!/usr/bin/env python
-"""Round-11 optimization profiler: isolate per-query cost + plans.
+"""Per-query profiler: isolate per-query cost + plans.
 
 For each named query (or a preset list), this tool
 
-  - captures ``df.explain("formatted")`` into ``plans/r11/<name>_<tag>.txt``
-    (the judge-checkable artifact for plan claims), and
-  - times N noop-sink materializations (guide §1.4: full computation,
-    no driver collect, no output cost), printing per-rep seconds.
+  - captures ``df.explain("formatted")`` into
+    ``plans/profile/<name>_<tag>.txt`` (the checkable artifact for plan
+    claims), and
+  - times N noop-sink materializations (full computation, no driver
+    collect, no output cost), printing per-rep seconds.
 
-Warmups mirror bench.py exactly (codegen, streaming machinery, bucketed
-/ clustered / staged-IVF layouts) so the first rep is not billed for
-engine spin-up and the timings are comparable to the driver bench.
+It warms up with ``bench.warm_up`` — codegen, the Python/Arrow worker
+pool, the streaming machinery, bucketed / clustered / staged-IVF
+layouts — so the first rep is not billed for engine spin-up and the
+timings are comparable to the bench.
 
 Usage:
-    python tools/profile_r11.py --tag before --reps 3 <query> [<query> ...]
-    python tools/profile_r11.py --tag before --top          # preset list
-    python tools/profile_r11.py --time-only <query>         # no plan file
+    python tools/profile_query.py --tag before --reps 3 <query> [<query> ...]
+    python tools/profile_query.py --tag before --top          # preset list
+    python tools/profile_query.py --time-only <query>         # no plan file
 """
 
 from __future__ import annotations
@@ -32,7 +34,7 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 sys.path.insert(0, ROOT)
 
-#: The round-11 examination list: every headline query >= ~1.5s in
+#: The preset examination list: every headline query >= ~1.5s in
 #: BENCH_r10 plus the full subset-24 (the citable instrument).
 TOP = [
     "minhash_quality_eval", "doc_winnowing_fingerprints",
@@ -70,36 +72,21 @@ def main() -> None:
     if not names:
         ap.error("no queries given")
 
-    from sql_database_engine_spark.session import get_spark
+    from bench import warm_up
+    from sql_database_engine_spark.session import default_parallelism, get_spark
     import __spark_entry__ as contract
 
-    spark = get_spark("profile_r11")
+    cpus = default_parallelism()
+    spark = get_spark("profile_query", cpus=cpus)
     qs = contract.queries()
     sf_dir = args.sf_dir
 
     def noop(df):
         df.write.format("noop").mode("overwrite").save()
 
-    # Warmups: identical to bench.py (untimed engine/layout staging).
-    noop(qs["full_scan"](spark, sf_dir))
-    noop(qs["flagship_revenue_by_region"](spark, sf_dir))
-    from sql_database_engine_spark.streaming import events_stream as _es
-    _s = _es.events_stream(spark, sf_dir)
-    _es.run_available_now(
-        _es.tumbling_counts(_s), "bench_stream_warmup",
-        output_mode="complete",
-        state_partitions=_es.backlog_state_partitions(sf_dir))
-    from sql_database_engine_spark.sources.bucketed import ensure_bucketed_facts
-    ensure_bucketed_facts(spark, sf_dir)
-    from sql_database_engine_spark.sources.clustering import (
-        ensure_clustered_lineitem)
-    ensure_clustered_lineitem(spark, sf_dir)
-    from sql_database_engine_spark.operators.similarity import (
-        _ivf_stage, _ivf_stage_incremental)
-    _ivf_stage(spark, sf_dir)
-    _ivf_stage_incremental(spark, sf_dir)
+    warm_up(spark, sf_dir, cpus)
 
-    plans_dir = os.path.join(ROOT, "plans", "r11")
+    plans_dir = os.path.join(ROOT, "plans", "profile")
     os.makedirs(plans_dir, exist_ok=True)
 
     results = {}
@@ -107,7 +94,7 @@ def main() -> None:
         if name not in qs:
             print(f"!! unknown query: {name}")
             continue
-        spark.sparkContext.setJobDescription(f"r11-profile: {name}")
+        spark.sparkContext.setJobDescription(f"profile: {name}")
         df = qs[name](spark, sf_dir)
         if not args.time_only:
             buf = io.StringIO()

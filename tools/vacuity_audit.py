@@ -13,7 +13,7 @@ the anti join's retention direction. Rewritten in round 5.
 Usage:
     python tools/vacuity_audit.py SWEEPS/r5_final_gate_sf001.jsonl [...]
 
-Reads one or more cert_sweep per-query artifact files (jsonl), takes
+Reads one or more tools/sweep.py per-query artifact files (jsonl), takes
 the LAST row count seen per query, and exits nonzero if any query
 outside the allowlist returned zero rows. One-row results are listed
 informationally — scalar contracts and global statistics are one row
