@@ -15,7 +15,9 @@ the reference exactly where tested, including its quirks
 - the id is parsed stoi-style: a leading integer prefix counts
   (``12abc`` → 12). DOCUMENTED DEVIATION: a token with no integer
   prefix crashes the reference's REPL (uncaught std::invalid_argument,
-  db.cpp:409); we return the syntax error instead.
+  db.cpp:409); we return the syntax error instead. The same deviation
+  covers ids outside the ``id`` column's INT range, where the
+  reference's ``stoi`` throws ``std::out_of_range``.
 - the negative check runs after parse (db.cpp:411-414), length checks
   after that (db.cpp:416-419) — error precedence preserved.
 """
@@ -31,6 +33,8 @@ from ..errors import (NEGATIVE_ID, STRING_TOO_LONG, SYNTAX_ERROR,
 from ..schemas import COLUMN_EMAIL_SIZE, COLUMN_USERNAME_SIZE
 
 _INT_PREFIX = re.compile(r"^[+-]?\d+")
+#: Range of the ``id`` column (IntegerType in schemas.USERS) and of stoi.
+_INT_MIN, _INT_MAX = -2**31, 2**31 - 1
 
 
 class StatementType(Enum):
@@ -64,6 +68,8 @@ def _prepare_insert(line: str) -> Statement:
     if not m:
         raise PrepareError(SYNTAX_ERROR)  # deviation: reference crashes here
     row_id = int(m.group())
+    if not _INT_MIN <= row_id <= _INT_MAX:
+        raise PrepareError(SYNTAX_ERROR)  # deviation: reference crashes here
     if row_id < 0:
         raise PrepareError(NEGATIVE_ID)
     if len(username) > COLUMN_USERNAME_SIZE or len(email) > COLUMN_EMAIL_SIZE:

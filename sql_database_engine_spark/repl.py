@@ -9,6 +9,8 @@ line (spec/main_spec.rb). Run with:
 Deviations (documented, all in untested reference behavior):
 - non-integer id → syntax error instead of an uncaught-exception
   crash (plans/statement.py).
+- id outside the `id` column's INT range → syntax error instead of the
+  reference's uncaught std::out_of_range from stoi (plans/statement.py).
 - EOF on stdin closes the table and exits cleanly; the reference
   spins on a failed getline.
 - `.constants` reports THIS engine's metadata under "Constants:" —

@@ -1,7 +1,7 @@
 """Persistent `users` table: the reference's single table on Parquet.
 
 Reference storage is a 4 KB-paged single file with a one-leaf B-tree
-(/root/reference/db.cpp:23-92); that is *mechanism*, and Parquet +
+(the reference's db.cpp:23-92); that is *mechanism*, and Parquet +
 Spark's reader replaces it wholesale. What we preserve is the tested
 *capability contract*:
 
@@ -20,16 +20,24 @@ Spark's reader replaces it wholesale. What we preserve is the tested
   written actually dies at 13 rows — an unsplit leaf, db.cpp:350-355;
   reproducing that would be reproducing a bug.)
 
-At scale: appends land as new parquet files (no rewrite), the seq
-counter makes ordering explicit instead of file-order-dependent, and
-`select` is an ordinary pruned scan.
+Every read (open, `select`, `.btree`) is at most one Spark job: a
+scan of the stored files under the declared ``schemas.USERS`` (no
+footer inference, no shuffle), collected and sorted by
+``insertion_seq`` on the driver. The capacity rule bounds that sort
+at 1400 rows. Buffered rows always carry sequence numbers after every
+stored row, so a read is the sorted stored rows followed by the
+buffer. Appends land as new parquet files (no rewrite). One writer
+per directory is assumed, as the reference assumes one process per
+database file: the row count and the next sequence number are taken
+once, at open.
 """
 
 from __future__ import annotations
 
 import os
+from operator import itemgetter
 
-from pyspark.sql import DataFrame, Row, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from . import schemas
 from .errors import TableFullError
@@ -37,6 +45,9 @@ from .session import tune
 
 #: Reference's vestigial array-layout capacity (db.cpp:57-59).
 TABLE_MAX_ROWS = 1400
+
+#: (id, username, email, insertion_seq), the column order of schemas.USERS.
+StoredRow = tuple[int, str, str, int]
 
 
 class UsersTable:
@@ -47,19 +58,23 @@ class UsersTable:
         self.path = os.path.abspath(path)
         self._pending: list[tuple[int, str, str]] = []
         os.makedirs(self.path, exist_ok=True)
-        if self._has_data():
-            stats = (self.spark.read.parquet(self.path)
-                     .agg(F.count(F.lit(1)).alias("n"),
-                          F.max("insertion_seq").alias("mx"))
-                     .collect()[0])
-            self._persisted_rows = stats["n"]
-            self._next_seq = (stats["mx"] or -1) + 1
-        else:
-            self._persisted_rows = 0
-            self._next_seq = 0
+        has_data = any(name.endswith(".parquet") for name in os.listdir(self.path))
+        stored = self._scan() if has_data else []
+        self._persisted_rows = len(stored)
+        self._next_seq = stored[-1][3] + 1 if stored else 0
 
-    def _has_data(self) -> bool:
-        return any(name.endswith(".parquet") for name in os.listdir(self.path))
+    def _scan(self) -> list[StoredRow]:
+        """Every stored row in insertion order (one Spark job)."""
+        rows = self.spark.read.schema(schemas.USERS).parquet(self.path).collect()
+        return sorted(map(tuple, rows), key=itemgetter(3))
+
+    def _buffer(self) -> list[StoredRow]:
+        return [(i, u, e, self._next_seq + k)
+                for k, (i, u, e) in enumerate(self._pending)]
+
+    def _rows(self) -> list[StoredRow]:
+        """Stored rows then the buffer: insertion order."""
+        return (self._scan() if self._persisted_rows else []) + self._buffer()
 
     @property
     def row_count(self) -> int:
@@ -72,45 +87,26 @@ class UsersTable:
         self._pending.append((row_id, username, email))
 
     def dataframe(self) -> DataFrame:
-        """The table as a DataFrame in insertion order: persisted
-        parquet unioned with the unflushed buffer (the reference's
-        select equally sees unflushed pages)."""
-        parts = []
-        if self._persisted_rows:
-            parts.append(self.spark.read.parquet(self.path))
-        if self._pending:
-            parts.append(self.spark.createDataFrame(
-                [Row(id=i, username=u, email=e,
-                     insertion_seq=self._next_seq + k)
-                 for k, (i, u, e) in enumerate(self._pending)],
-                schema=schemas.USERS))
-        if not parts:
-            return self.spark.createDataFrame([], schema=schemas.USERS)
-        df = parts[0]
-        for p in parts[1:]:
-            df = df.unionByName(p)
-        return df.orderBy("insertion_seq")
+        """The table as a DataFrame in insertion order, unflushed
+        buffer included (the reference's select equally sees unflushed
+        pages)."""
+        return self.spark.createDataFrame(self._rows(), schema=schemas.USERS)
 
     def select_rows(self) -> list[tuple[int, str, str]]:
         """All rows in insertion order (executeSelect, db.cpp:487-502)."""
-        return [(r["id"], r["username"], r["email"])
-                for r in self.dataframe().collect()]
+        return [r[:3] for r in self._rows()]
 
     def keys_in_order(self) -> list[int]:
         """Leaf-introspection analog: key column in insertion order
         (print_leaf_node, db.cpp:448-457)."""
-        return [r["id"] for r in self.dataframe().select("id", "insertion_seq").collect()]
+        return [r[0] for r in self._rows()]
 
     def flush(self) -> None:
         """Append the buffer to parquet (pager_flush analog,
         db.cpp:220-243 — but atomic per batch, not per page)."""
         if not self._pending:
             return
-        (self.spark.createDataFrame(
-            [Row(id=i, username=u, email=e,
-                 insertion_seq=self._next_seq + k)
-             for k, (i, u, e) in enumerate(self._pending)],
-            schema=schemas.USERS)
+        (self.spark.createDataFrame(self._buffer(), schema=schemas.USERS)
          .coalesce(1)
          .write.mode("append").parquet(self.path))
         self._persisted_rows += len(self._pending)

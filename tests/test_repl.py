@@ -215,3 +215,22 @@ def test_duplicate_keys_allowed(run_script):
         "Executed.",
         "db > ",
     ]
+
+
+def test_id_outside_int_range_is_syntax_error_not_crash(run_script):
+    # DOCUMENTED DEVIATION: the reference's stoi throws out_of_range on
+    # ids that do not fit the INT `id` column; the bounds themselves fit.
+    assert run_script([
+        "insert 3000000000 u e@x",
+        "insert -2147483649 u e@x",
+        "insert 2147483647 max max@x",
+        "select",
+        ".exit",
+    ]) == [
+        "db > Syntax error. Could not parse statement",
+        "db > Syntax error. Could not parse statement",
+        "db > Executed.",
+        "db > (2147483647, max, max@x)",
+        "Executed.",
+        "db > ",
+    ]
