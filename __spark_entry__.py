@@ -3,12 +3,13 @@
 ``entry(spark)`` runs the flagship query at sf0.001 (smoke).
 ``queries()`` exposes every implemented operator from SURVEY.md §2 as
 ``(spark, sf_dir) -> DataFrame`` callables; ``oracle_sql()`` gives the
-DuckDB-dialect SQL twin for each oracle-checkable query (same column
-names, bit-identical values — see
+DuckDB-dialect SQL twin for every one of them (same column names,
+bit-identical values — see
 ``sql_database_engine_spark/functions/exact.py`` for how float
 aggregates are made order-independent and engine-reproducible).
-Queries without an oracle entry (probabilistic LSH, engine-private
-hashing, pandas-UDF pipelines) get the driver's rows-only check.
+There are no rows-only queries: ``operators.query`` requires an
+oracle. The streaming twins (availableNow drains of the incremental
+engine) are the ``streaming`` family, oracle-checked like the rest.
 """
 
 from __future__ import annotations
@@ -38,6 +39,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB twin SQL for each oracle-checkable query."""
+    """DuckDB twin SQL for every registered query."""
     operators.load_all()
     return dict(ORACLES)

@@ -504,7 +504,7 @@ def key_skew_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(SUM(ABS(cnt1 * tot2 - cnt2 * tot1)) AS BIGINT) AS tvd_num,
            CAST(CAST(SUM(ABS(cnt1 * tot2 - cnt2 * tot1)) AS BIGINT)
                 AS DOUBLE)
-               / CAST(2 * MIN(tot1) * MIN(tot2) AS DOUBLE) AS tvd
+               / NULLIF(CAST(2 * MIN(tot1) * MIN(tot2) AS DOUBLE), 0) AS tvd
     FROM pert
     """,
 )
@@ -515,7 +515,12 @@ def docs_language_mix_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
     change?". Module policy arithmetic: the TVD numerator is the
     exact integer sum |cnt1*tot2 - cnt2*tot1| over languages (common
     denominator tot1*tot2), and the only float op is ONE final
-    division — bit-reproducible everywhere.
+    division — bit-reproducible everywhere. A one-document corpus
+    leaves the second half empty: there is no distribution to compare,
+    so ``tvd`` is NULL. Both engines say so with NULLIF on the zero
+    divisor: Spark's ANSI division raises DIVIDE_BY_ZERO on it, and
+    the oracle states the NULL rather than lean on DuckDB's own
+    zero-divisor result (NULL in DuckDB 1.0).
 
     One broadcast scalar (the midpoint) and one groupBy on lang: the
     shuffle carries O(languages) rows whatever the corpus size, the
@@ -547,5 +552,5 @@ def docs_language_mix_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
     return g.select(
         "n_langs", "docs_first", "docs_second", "tvd_num",
         (F.col("tvd_num").cast("double")
-         / (F.lit(2) * F.col("docs_first") * F.col("docs_second"))
-         .cast("double")).alias("tvd"))
+         / F.nullif((F.lit(2) * F.col("docs_first") * F.col("docs_second"))
+                    .cast("double"), F.lit(0.0))).alias("tvd"))

@@ -199,3 +199,12 @@ def test_rank_contract_tolerance_floors_at_one_position(
     keeps the contract meaningful at every n."""
     r = _rows(spark, "kll_merge_quantile_contract", single_row_dir)[0]
     assert (r["n_values"], r["p50_rank_ok"], r["p90_rank_ok"]) == (1, 1, 1)
+
+
+def test_language_mix_tvd_is_null_on_one_document(spark, single_row_dir):
+    """A one-document corpus leaves the second half empty: the TVD has
+    no distribution to compare against, so it is NULL — not an ANSI
+    DIVIDE_BY_ZERO."""
+    r = _rows(spark, "docs_language_mix_shift", single_row_dir)[0]
+    assert (r["docs_first"], r["docs_second"], r["tvd_num"]) == (1, 0, 0)
+    assert r["tvd"] is None

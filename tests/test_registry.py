@@ -294,3 +294,25 @@ def test_fingerprint_stamps_describe_registered_queries():
     assert not unknown, f"stamps for unregistered queries: {unknown}"
     assert all(len(v) == 64 and set(v) <= set("0123456789abcdef")
                for v in stamps.values())
+
+
+def test_every_query_lives_in_a_family_module():
+    """The family is the defining module's name, so a query registered
+    from the package itself (``operators/__init__.py``) would form a
+    bogus ``operators`` family; every registration goes through
+    ``@query`` in ``operators/<family>.py``."""
+    pkg = operators.__name__
+    stray = sorted(n for n, fn in operators.QUERIES.items()
+                   if fn.__module__.rsplit(".", 1)[0] != pkg)
+    assert not stray, f"queries outside operators/<family>.py: {stray}"
+
+
+def test_duplicate_registration_raises():
+    """Registering a taken name is a hard error and leaves both
+    registries untouched."""
+    name = next(iter(operators.QUERIES))
+    fn, oracle = operators.QUERIES[name], operators.ORACLES[name]
+    with pytest.raises(ValueError, match="duplicate query registration"):
+        operators.query(name, oracle="SELECT 1")(lambda spark, sf_dir: None)
+    assert operators.QUERIES[name] is fn
+    assert operators.ORACLES[name] == oracle

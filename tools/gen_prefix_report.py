@@ -55,11 +55,11 @@ def main() -> None:
     prefix = ordered[:args.prefix]
     first_time = [n for n in prefix if n not in history]
     reentries = [n for n in prefix if n in history]
-    # Reasons: the registry's carve-out names the rewritten queries;
-    # a checked name re-entering is either an explicit prefix_head pin
-    # or (round 8+) a staleness-rotation slot re-verifying an old
-    # green row once the never-sampled backlog no longer fills the
-    # window.
+    # Reasons: an unchecked name re-entering lost its driver row to a
+    # carve-out (fingerprint drift, the manual rewritten-since-sampled
+    # set, or an oracle upgrade); a checked one is a staleness-rotation
+    # slot re-verifying an old green row once the never-sampled
+    # backlog no longer fills the window.
     seen_now = operators._driver_checked()
     rounds_now = operators._sampled_rounds()
     print(f"Prefix composition (mechanical, `tools/gen_prefix_report.py`):")
@@ -68,22 +68,12 @@ def main() -> None:
           f"{len(first_time)}")
     print(f"- re-entries: {len(reentries)}")
     for n in reentries:
-        if n not in seen_now and n in history:
-            # Every name in this loop is a re-entry (n in history), so
-            # this branch captures ALL unchecked names — including any
-            # PREFIX_HEAD pin, whose pin only fires while the name is
-            # unchecked anyway.  The carve-out label (why the row went
-            # stale) is the informative one; a separate
-            # "explicit prefix_head pin" branch after this one was
-            # unreachable and has been dropped (ADVICE r10).
-            if (n in operators.ORACLES
-                    and rows_only_history.get(n) == history[n]):
+        if n not in seen_now:
+            if rows_only_history.get(n) == history[n]:
                 why = ("oracle-upgrade carve-out: every prior row was "
                        "rows-only, first hash check pending")
             else:
                 why = "rewritten-since-sampled carve-out"
-                if n in operators.PREFIX_HEAD:
-                    why += " (also an explicit prefix_head pin)"
         else:
             why = (f"staleness-rotation slot (last sampled "
                    f"r{rounds_now.get(n, 0):02d}, oldest-first re-verify)")

@@ -39,19 +39,12 @@ def main() -> None:
         f"**{len(ops.QUERIES)} registered queries, {n_oracle} with DuckDB "
         f"oracles, {len(ops.QUERIES) - n_oracle} rows-only.**",
         "",
-        "Rows-only queries are inherently oracle-free (sketch-value",
-        "internals, probabilistic index contents, watermark-buffered",
-        "stream state, environment stubs); any such registration must",
-        "be flanked by an oracle-checked contract twin or pytest pin",
-        "(e.g. `cms_error_contract`, `sketch_percentile_drift`). The",
-        "registry ordering sorts every rows-only query behind all",
-        "never-driver-checked oracle-backed ones, so they never occupy",
-        "a correctness-sample slot an oracle-backed query could use.",
-        "As of round 8 the tier is empty: the last rows-only query",
-        "(`agg_sketch_percentiles`) was retired — its raw KLL estimates",
-        "are merge-order-dependent and unoracleable, and its",
-        "approx_percentile kernel is driver-verified through",
-        "`sketch_percentile_drift`'s exact-rank contract (SURVEY §8).",
+        "`operators.query` requires an oracle, so there is no rows-only",
+        "tier. Capabilities whose raw output is not oracle-checkable",
+        "(sketch-value internals, probabilistic index contents,",
+        "watermark-buffered stream state) are driver-verified through an",
+        "oracle-checked contract twin (e.g. `cms_error_contract`,",
+        "`sketch_percentile_drift`, the `_settled` stream joins).",
         "",
     ]
     for fam in sorted(fams):
