@@ -16,6 +16,7 @@ independent of how many row rules are registered.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from ..catalog import Catalog
@@ -1074,8 +1075,8 @@ def churn_window_sensitivity(spark: SparkSession,
     last_seen = (ev.groupBy("user_id")
                  .agg(F.max(F.unix_micros(F.col("ts"))).alias("last_us")))
     frontier = last_seen.agg(F.max("last_us").alias("now_us"))
-    wdf = (Catalog(spark, sf_dir).events.sparkSession
-           .createDataFrame([(7,), (14,), (30,)], "window_days int"))
+    wdf = ev.sparkSession.createDataFrame(
+        pa.table({"window_days": pa.array([7, 14, 30], pa.int32())}))
     joined = (last_seen.crossJoin(F.broadcast(frontier))
               .crossJoin(F.broadcast(wdf)))
     churned = F.sum(

@@ -24,6 +24,7 @@ from __future__ import annotations
 
 import os
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, functions as F
 
 #: Bits per dimension: 8 → 65,536 Z-cells, plenty to order files by;
@@ -76,8 +77,9 @@ def zorder_write(df: DataFrame, path: str, cols: tuple[str, str],
      .write.mode("overwrite").parquet(path))
 
 
-def _hilbert_lookup(bits: int):
-    """The (x, y) → Hilbert-d mapping for a 2^bits grid, computed once
+def _hilbert_lookup(bits: int) -> pa.Table:
+    """The (x, y) → Hilbert-d mapping for a 2^bits grid as an Arrow
+    table of int64 columns ``__hx``, ``__hy``, ``__h``, computed once
     driver-side (vectorized numpy, ~65k cells at bits=8). The iterative
     rotate-and-accumulate recurrence would otherwise become an
     exponentially-duplicated column expression tree; as data it is a
@@ -99,8 +101,7 @@ def _hilbert_lookup(bits: int):
         swap_y = np.where(flip, np.where(rx == 1, s - 1 - x, x), y)
         x, y = swap_x, swap_y
         s >>= 1
-    return [(int(a), int(b), int(c))
-            for a, b, c in zip(xs.ravel(), ys.ravel(), d)]
+    return pa.table({"__hx": xs.ravel(), "__hy": ys.ravel(), "__h": d})
 
 
 def hilbert_write(df: DataFrame, path: str, cols: tuple[str, str],
@@ -113,7 +114,8 @@ def hilbert_write(df: DataFrame, path: str, cols: tuple[str, str],
     a, b = cols
     stats = df.agg(F.min(a).alias("la"), F.max(a).alias("ha"),
                    F.min(b).alias("lb"), F.max(b).alias("hb")).first()
-    lut = spark.createDataFrame(_hilbert_lookup(bits), ["__hx", "__hy", "__h"])
+    cells = _hilbert_lookup(bits)
+    lut = spark.createDataFrame(cells)
     keyed = (df.withColumn("__hx", _quantize(F.col(a), stats["la"], stats["ha"], bits))
              .withColumn("__hy", _quantize(F.col(b), stats["lb"], stats["hb"], bits))
              .join(F.broadcast(lut), ["__hx", "__hy"]))

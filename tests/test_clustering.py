@@ -85,3 +85,18 @@ def test_engine_cluster_api_both_curves(spark, tmp_path):
         out = e.zorder_table(li, str(tmp_path / curve),
                              ("l_partkey", "l_suppkey"), files=4, curve=curve)
         assert out.count() == li.count()
+
+
+def test_hilbert_lookup_walks_the_grid_in_unit_steps(spark):
+    from sql_database_engine_spark.sources.clustering import _hilbert_lookup
+
+    bits = 4
+    lut = _hilbert_lookup(bits).to_pydict()
+    walk = sorted(zip(lut["__h"], lut["__hx"], lut["__hy"]))
+    assert [h for h, _, _ in walk] == list(range(1 << 2 * bits))
+    # Consecutive curve positions are grid neighbours: no diagonal jumps.
+    assert all(abs(x1 - x0) + abs(y1 - y0) == 1
+               for (_, x0, y0), (_, x1, y1) in zip(walk, walk[1:]))
+    schema = spark.createDataFrame(_hilbert_lookup(bits)).schema
+    assert schema.simpleString() == "struct<__hx:bigint,__hy:bigint,__h:bigint>"
+    assert all(f.nullable for f in schema)

@@ -1,6 +1,7 @@
 """The users-table storage contract (storage.UsersTable): insertion
 order across flushed files and the buffer, reopen, the capacity rule,
-durability only at close, and the number of Spark jobs per read."""
+durability only at close, type checks before any write, and the number
+of Spark jobs per read and per flush."""
 
 from __future__ import annotations
 
@@ -93,6 +94,22 @@ def test_dataframe_matches_select_rows(spark, tmp_path):
     assert UsersTable(spark, str(tmp_path / "empty.db")).dataframe().count() == 0
 
 
+@pytest.mark.parametrize("bad", [
+    (1, None, "e@x"),         # NULL in a non-nullable column
+    (2 ** 31, "u", "e@x"),    # outside int32
+    ("1", "u", "e@x"),        # id of the wrong type
+    (1.5, "u", "e@x"),        # a float id is refused, not truncated
+], ids=["null-username", "id-2^31", "str-id", "float-id"])
+def test_bad_row_raises_before_any_write(spark, tmp_path, bad):
+    path = str(tmp_path / "t.db")
+    table = UsersTable(spark, path)
+    with pytest.raises((TypeError, ValueError)):
+        table.insert(*bad)
+        table.close()
+    assert not [f for f in os.listdir(path) if f.endswith(".parquet")]
+    assert UsersTable(spark, path).select_rows() == []
+
+
 # --- Spark jobs per storage call -------------------------------------
 
 def _jobs(spark, group: str, call):
@@ -135,3 +152,22 @@ def test_reads_of_stored_rows_run_one_job(spark, tmp_path):
     assert (rows, jobs) == ([_row(k) for k in range(4)], 1)
     keys, jobs = _jobs(spark, "storage-keys-stored", table.keys_in_order)
     assert (keys, jobs) == ([_row(k)[0] for k in range(4)], 1)
+
+
+def test_flush_runs_one_job(spark, tmp_path):
+    table = UsersTable(spark, str(tmp_path / "t.db"))
+    for k in range(3):
+        table.insert(*_row(k))
+    _, jobs = _jobs(spark, "storage-flush", table.flush)
+    assert jobs == 1
+
+
+def test_dataframe_is_a_local_relation(spark, tmp_path):
+    # Built from an in-process Arrow table, not a pickled Python RDD.
+    path = str(tmp_path / "t.db")
+    _session(spark, path, [_row(0)])
+    table = UsersTable(spark, path)
+    table.insert(*_row(1))
+    plan = table.dataframe()._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan
+    assert "ExistingRDD" not in plan
