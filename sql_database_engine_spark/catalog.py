@@ -69,11 +69,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return _canonicalize(name, df)
 
 
-def load_tables(spark: SparkSession, sf_dir: str,
-                names: tuple[str, ...] = TABLE_NAMES) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in names}
-
-
 def register_views(spark: SparkSession, sf_dir: str,
                    names: tuple[str, ...] = TABLE_NAMES) -> None:
     """Register canonical temp views so ``spark.sql`` queries see the

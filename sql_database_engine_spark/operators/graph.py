@@ -92,14 +92,6 @@ _P75_EDGES_SQL = f"""
 
 
 
-def _basket(cat: Catalog) -> DataFrame:
-    return (cat.lineitem.select("l_orderkey", "l_partkey")
-            .join(F.broadcast(cat.part.select("p_partkey", "p_brand")),
-                  F.col("l_partkey") == F.col("p_partkey"))
-            .select("l_orderkey", "p_brand")
-            .distinct())
-
-
 def _brand_dim(cat: Catalog) -> DataFrame:
     """The |brands|-row (p_brand, bid) dictionary. Ids are assigned in
     brand STRING order, so every int comparison (<, MIN, ORDER BY) on

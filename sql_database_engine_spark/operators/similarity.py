@@ -27,6 +27,7 @@ Scale story:
 
 from __future__ import annotations
 
+from decimal import ROUND_HALF_UP, Decimal
 from typing import Iterator, Tuple
 
 import numpy as np
@@ -1831,6 +1832,24 @@ def _pca_round_sql(vprev: str, sname: str, wname: str, vname: str) -> str:
     )"""
 
 
+def _half_up(x: float) -> int:
+    """Spark's ``round(x)`` on a finite double, as an int."""
+    return int(Decimal(x).quantize(Decimal(1), rounding=ROUND_HALF_UP))
+
+
+def _pca_next_iterate(rows) -> list:
+    """The next power-iteration iterate from one round's ``(i, w)``
+    rows, ordered by ``i``: v = round(w * 1e6 / max|w|), computed as
+    Spark computes it — a NULL ``w`` stays NULL (and is skipped by the
+    max), no rows give no iterate, and max|w| = 0 raises as ANSI
+    Spark's DIVIDE_BY_ZERO does."""
+    ws = [w for _, w in sorted(rows, key=lambda r: r[0])]
+    m = max((abs(w) for w in ws if w is not None), default=None)
+    if m == 0:
+        raise ZeroDivisionError("pca_power_iteration: max|w| is 0")
+    return [None if w is None else _half_up(w * 1000000.0 / m) for w in ws]
+
+
 @query(
     "pca_power_iteration",
     oracle=f"""
@@ -1865,10 +1884,10 @@ def pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     ANN rotation, and anisotropy audits. The Gram matrix G = Σ e eᵀ
     is never materialized: each round computes w = Σ_vec e (e·v)
     directly, so a round is one corpus map-pass (per-row dot product
-    against the broadcast 64-value iterate — a higher-order-function
-    fold, no join) followed by a 64-key aggregate. That is the 100 TB
-    design choice: the Gram route explodes the corpus ×d² (4096 rows
-    per vector); the matrix-free route touches each row 3 times with
+    against the 64-value iterate — a higher-order-function fold, no
+    join) followed by a 64-key aggregate. That is the 100 TB design
+    choice: the Gram route explodes the corpus ×d² (4096 rows per
+    vector); the matrix-free route touches each row 3 times with
     d-bounded work and its only shuffle carries 64 keys, partial-
     aggregated map-side.
 
@@ -1876,54 +1895,58 @@ def pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     once to integer micros; the dot product is an exact integer fold;
     the corpus sum runs in a DECIMAL(38,0) lane (exact at any corpus
     size — int64 would overflow near 1e9 vectors); normalization is
-    a fixed double round-and-divide both engines execute identically.
-    Like the connected-components operator, the iteration feeds each
-    round's 64-value result back via a driver action (64 ints — the
-    CC-convergence-count precedent); rounds one and two collect,
-    round three composes lazily into the returned plan. Sign is
-    canonicalized by the dominant-|loading| component and
-    eig_est_micros = max|w| / n is the Rayleigh-style eigenvalue
-    estimate the iteration exposes for free."""
+    v = round(w * 1e6 / max|w|), a fixed double divide and round.
+
+    Feedback: rounds one and two collect the 64-key aggregate alone
+    (64 ``(i, w)`` rows, one shuffle) and L∞-normalize on the driver
+    (:func:`_pca_next_iterate`). The driver's division is the same
+    IEEE double operation Spark runs, and its HALF_UP rounding of the
+    exact binary value equals Spark's ``round`` (HALF_UP of the
+    double's shortest decimal string): a ``.5`` tie below 2^52 is
+    itself a double, so no double other than the tie can print as it
+    or on its far side. Each round's iterate enters the next pass as
+    ONE parsed literal, ``CAST(array(v1L, …) AS ARRAY<BIGINT>)``.
+    Round three composes lazily into the returned plan and normalizes
+    Spark-side. Sign is canonicalized by the dominant-|loading|
+    component and eig_est_micros = max|w| / n is the Rayleigh-style
+    eigenvalue estimate the iteration exposes for free."""
     e = Catalog(spark, sf_dir).embeddings
-    em = F.expr("transform(embedding, x ->"
-                " CAST(ROUND(CAST(x AS DOUBLE) * 1000000.0D) AS BIGINT))")
 
-    def w_pass(v_lit: list[int]):
+    def w_pass(v: list) -> DataFrame:
         """One corpus pass: w[i] = Σ_vec em[i] * floor(em·v / 1e6)."""
-        v_arr = F.array(*[F.lit(int(x)).cast("bigint") for x in v_lit])
-        s = F.aggregate(
-            F.zip_with(em, v_arr, lambda a, b: a * b),
-            F.lit(0).cast("bigint"), lambda acc, x: acc + x)
-        sf_ = F.floor(s.cast("double") / 1000000.0).cast("bigint")
-        return (e.select(sf_.alias("sf"), em.alias("em"))
-                .select(F.posexplode(
-                    F.expr("transform(em, t -> t * sf)")).alias("p", "c"))
-                .select((F.col("p") + 1).alias("i"),
-                        F.col("c").cast("decimal(38,0)").alias("c"))
-                .groupBy("i")
-                .agg(F.sum("c").cast("double").alias("w")))
+        v_arr = "CAST(array({}) AS ARRAY<BIGINT>)".format(", ".join(
+            "NULL" if x is None else f"{x}L" for x in v))
+        dot = (f"aggregate(zip_with(em, {v_arr}, (a, b) -> a * b),"
+               " 0L, (acc, x) -> acc + x)")
+        # sf gets its own projection, so it is computed once per row,
+        # not once per element inside the transform lambda below.
+        return (e.selectExpr("transform(embedding, x -> CAST(ROUND("
+                             "CAST(x AS DOUBLE) * 1000000.0D) AS BIGINT))"
+                             " AS em")
+                .selectExpr("em", f"CAST(FLOOR(CAST({dot} AS DOUBLE)"
+                                  " / 1000000.0D) AS BIGINT) AS sf")
+                .selectExpr("posexplode(transform(em, t -> t * sf))"
+                            " AS (p, c)")
+                .groupBy(F.expr("p + 1").alias("i"))
+                .agg(F.expr("CAST(SUM(CAST(c AS DECIMAL(38,0)))"
+                            " AS DOUBLE)").alias("w")))
 
-    def normalize(w_df: DataFrame) -> DataFrame:
-        m = w_df.agg(F.max(F.abs(F.col("w"))).alias("m"))
-        return (w_df.crossJoin(F.broadcast(m))
-                .select("i", F.round(F.col("w") * 1000000.0 / F.col("m"))
-                        .cast("bigint").alias("v")))
-
-    v_lit = [1000000] * 64
-    for _ in range(2):  # rounds 1-2: driver-fed 64-int feedback
-        rows = normalize(w_pass(v_lit)).collect()
-        v_lit = [r["v"] for r in sorted(rows, key=lambda r: r["i"])]
-    w = w_pass(v_lit).localCheckpoint(eager=False)  # round 3: lazy
-    v = normalize(w)
-    sgn = v.agg(
+    v = [1000000] * 64
+    for _ in range(2):  # rounds 1-2: driver-fed 64-key feedback
+        v = _pca_next_iterate(w_pass(v).collect())
+    w = w_pass(v).localCheckpoint(eager=False)  # round 3: lazy
+    m = w.agg(F.max(F.abs(F.col("w"))).alias("m"))
+    v3 = (w.crossJoin(F.broadcast(m))
+          .select("i", F.round(F.col("w") * 1000000.0 / F.col("m"))
+                  .cast("bigint").alias("v")))
+    sgn = v3.agg(
         F.when(F.expr("max_by(v, abs(v) * 1000 + (1000 - i))") >= 0, 1)
         .otherwise(-1).alias("s"))
     n_row = e.agg(F.count(F.lit(1)).cast("double").alias("n"))
-    eig = (w.agg(F.max(F.abs(F.col("w"))).alias("m"))
-           .crossJoin(F.broadcast(n_row))
+    eig = (m.crossJoin(F.broadcast(n_row))
            .select(F.round(F.col("m") / F.col("n")).cast("bigint")
                    .alias("eig_est_micros")))
-    return (v.crossJoin(F.broadcast(sgn)).crossJoin(F.broadcast(eig))
+    return (v3.crossJoin(F.broadcast(sgn)).crossJoin(F.broadcast(eig))
             .select(F.col("i").cast("bigint").alias("dim"),
                     (F.col("v") * F.col("s")).cast("bigint")
                     .alias("loading_micros"),

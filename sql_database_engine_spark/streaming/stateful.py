@@ -140,22 +140,6 @@ class DistinctTypesProcessor(StatefulProcessor):
         pass
 
 
-def user_event_type_sets_tws(events: DataFrame) -> DataFrame:
-    """Per-user distinct-event-type set as a transformWithState
-    stream (see DistinctTypesProcessor for why this variant is not
-    driver-registered here)."""
-    return (
-        events.select("user_id", "event_type")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=DistinctTypesProcessor(),
-            outputStructType=TYPES_OUTPUT_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
-        )
-    )
-
-
 _TYPES_STATE_SCHEMA = T.StructType([T.StructField("types", T.StringType())])
 
 

@@ -32,3 +32,17 @@ def duck():
     register_duck_views(con, SF_ORACLE)
     yield con
     con.close()
+
+
+def jobs_started(spark, group: str, call):
+    """Run ``call`` under job group ``group``; its result and the
+    number of Spark jobs it started."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        result = call()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # Job records reach the status store through the listener bus.
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return result, len(sc.statusTracker().getJobIdsForGroup(group))

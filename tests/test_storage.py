@@ -12,6 +12,8 @@ import pytest
 from sql_database_engine_spark.errors import TableFullError
 from sql_database_engine_spark.storage import TABLE_MAX_ROWS, UsersTable
 
+from .conftest import jobs_started
+
 
 def _row(k: int) -> tuple[int, str, str]:
     # Keys descend, so insertion order is never key order.
@@ -112,32 +114,20 @@ def test_bad_row_raises_before_any_write(spark, tmp_path, bad):
 
 # --- Spark jobs per storage call -------------------------------------
 
-def _jobs(spark, group: str, call):
-    """Run ``call`` under job group ``group``; its result and the
-    number of Spark jobs it started."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        result = call()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    # Job records reach the status store through the listener bus.
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return result, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_open_empty_directory_runs_no_job(spark, tmp_path):
-    _, jobs = _jobs(spark, "storage-open-empty",
-                    lambda: UsersTable(spark, str(tmp_path / "t.db")))
+    _, jobs = jobs_started(spark, "storage-open-empty",
+                           lambda: UsersTable(spark, str(tmp_path / "t.db")))
     assert jobs == 0
 
 
 def test_reads_of_buffered_rows_run_no_job(spark, tmp_path):
     table = UsersTable(spark, str(tmp_path / "t.db"))
     table.insert(*_row(0))
-    rows, jobs = _jobs(spark, "storage-select-buffered", table.select_rows)
+    rows, jobs = jobs_started(spark, "storage-select-buffered",
+                              table.select_rows)
     assert (rows, jobs) == ([_row(0)], 0)
-    keys, jobs = _jobs(spark, "storage-keys-buffered", table.keys_in_order)
+    keys, jobs = jobs_started(spark, "storage-keys-buffered",
+                              table.keys_in_order)
     assert (keys, jobs) == ([_row(0)[0]], 0)
 
 
@@ -145,12 +135,15 @@ def test_reads_of_stored_rows_run_one_job(spark, tmp_path):
     path = str(tmp_path / "t.db")
     for k in range(3):
         _session(spark, path, [_row(k)])
-    table, jobs = _jobs(spark, "storage-open-stored", lambda: UsersTable(spark, path))
+    table, jobs = jobs_started(spark, "storage-open-stored",
+                               lambda: UsersTable(spark, path))
     assert jobs == 1
     table.insert(*_row(3))
-    rows, jobs = _jobs(spark, "storage-select-stored", table.select_rows)
+    rows, jobs = jobs_started(spark, "storage-select-stored",
+                              table.select_rows)
     assert (rows, jobs) == ([_row(k) for k in range(4)], 1)
-    keys, jobs = _jobs(spark, "storage-keys-stored", table.keys_in_order)
+    keys, jobs = jobs_started(spark, "storage-keys-stored",
+                              table.keys_in_order)
     assert (keys, jobs) == ([_row(k)[0] for k in range(4)], 1)
 
 
@@ -158,7 +151,7 @@ def test_flush_runs_one_job(spark, tmp_path):
     table = UsersTable(spark, str(tmp_path / "t.db"))
     for k in range(3):
         table.insert(*_row(k))
-    _, jobs = _jobs(spark, "storage-flush", table.flush)
+    _, jobs = jobs_started(spark, "storage-flush", table.flush)
     assert jobs == 1
 
 
