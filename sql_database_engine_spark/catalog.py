@@ -17,16 +17,24 @@ tables to DataFrames, applying per-table canonicalization:
   reinterprets the wall-clock as the identical UTC instant — exactly
   how the DuckDB oracle's ``epoch_us(naive ts)`` treats it.
 
-Reads are plain ``spark.read.parquet`` so Catalyst keeps predicate
-pushdown / column pruning / partition pruning; nothing here
-materializes or caches by default.
+Every read takes its schema from :func:`_read_schema`, so no load runs
+a Spark job to infer one. Nine tables read as declared in
+``schemas.TESTDATA_SCHEMAS``; ``events`` swaps the canonical ``ts`` for
+the type its parquet footer names (``pyarrow.parquet.read_schema`` on
+the file, or on the first part of a directory-shaped table):
+``timestamp[ns]`` reads as ``LongType``, ``timestamp[us]`` as
+``TimestampNTZType``, and any other type raises. Reads stay plain
+parquet scans, so Catalyst keeps predicate pushdown / column pruning /
+partition pruning; nothing here materializes or caches by default.
 """
 
 from __future__ import annotations
 
+import glob
 import os
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from . import schemas
 from .session import tune
@@ -60,12 +68,37 @@ def _canonicalize(name: str, df: DataFrame) -> DataFrame:
     return df
 
 
+#: Physical ``events.ts`` footer type → the type Spark reads it as.
+_EVENTS_TS_READ_TYPES = {
+    "timestamp[ns]": T.LongType(),  # under nanosAsLong (session.py)
+    "timestamp[us]": T.TimestampNTZType(),
+}
+
+
+def _read_schema(sf_dir: str, name: str) -> T.StructType:
+    """The schema a testdata table is read with (see module docstring)."""
+    declared = schemas.TESTDATA_SCHEMAS[name]
+    if name != "events":
+        return declared
+    path = os.path.join(sf_dir, "events.parquet")
+    if os.path.isdir(path):
+        path = sorted(glob.glob(os.path.join(path, "*.parquet")))[0]
+    ts = str(pq.read_schema(path).field("ts").type)
+    if ts not in _EVENTS_TS_READ_TYPES:
+        raise ValueError(f"events.ts has unsupported parquet type {ts}; "
+                         f"known: {sorted(_EVENTS_TS_READ_TYPES)}")
+    return T.StructType([
+        T.StructField(f.name, _EVENTS_TS_READ_TYPES[ts], f.nullable)
+        if f.name == "ts" else f for f in declared])
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one driver testdata table as its canonical DataFrame."""
     if name not in schemas.TESTDATA_SCHEMAS:
         raise KeyError(f"unknown table {name!r}; known: {TABLE_NAMES}")
     tune(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = (spark.read.schema(_read_schema(sf_dir, name))
+          .parquet(os.path.join(sf_dir, f"{name}.parquet")))
     return _canonicalize(name, df)
 
 

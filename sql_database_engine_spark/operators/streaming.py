@@ -269,9 +269,7 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def stream_user_event_type_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user distinct-event-type set via custom set-valued
-    state (applyInPandasWithState; the transformWithState twin is
-    implemented in streaming/stateful.py but is not executable on
-    the supported Spark build — see its docstring).
+    state (applyInPandasWithState).
     Update mode re-emits a user's row per micro-batch; the set
     only grows, so the final state is the struct-max over the
     drain — deterministic under any batch split."""

@@ -48,7 +48,8 @@ _SPINE_SQL = """
             FROM orders WHERE o_orderdate IS NOT NULL GROUP BY 1
         ), bounds AS (
             SELECT MIN(d) AS d0, MAX(d) AS d1,
-                   ASSERT_TRUE(DATEDIFF(MAX(d), MIN(d)) < :cap,
+                   -- no dated order: a NULL span, which nothing caps
+                   ASSERT_TRUE(COALESCE(DATEDIFF(MAX(d), MIN(d)), 0) < :cap,
                                'date spine span exceeds cap')
                        AS overflow
             FROM daily

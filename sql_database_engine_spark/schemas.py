@@ -4,16 +4,18 @@ The reference compiles its single schema into the binary
 (`db.cpp:41-46`); our analog is this module: one declared
 ``StructType`` per table. ``USERS`` is the schema the REPL store
 writes. The driver testdata schemas describe what
-``catalog.load_table`` returns: the types Spark infers from the
-parquet footers, after the catalog's canonicalization. Reads still
-infer their schema; ``tests/test_sources.py`` pins these declarations
-to the loaded tables so the two cannot drift apart silently.
+``catalog.load_table`` returns, after the catalog's canonicalization,
+and every testdata read uses them in place of footer inference
+(``catalog._read_schema``). ``tests/test_sources.py`` pins each
+declaration to the types Spark infers from the parquet files, so a
+declaration cannot drift from the data silently.
 
 ``o_orderdate`` and ``l_shipdate`` are stored as ``timestamp[us]``
 without a UTC annotation, which Spark reads as ``TIMESTAMP_NTZ``.
 ``events.ts`` has shipped both as that and as INT64
-TIMESTAMP(NANOS); the catalog normalizes either encoding to a
-microsecond ``TimestampType``, which is what is declared here.
+TIMESTAMP(NANOS); the catalog reads whichever the footer names and
+normalizes it to a microsecond ``TimestampType``, which is what is
+declared here.
 """
 
 from __future__ import annotations
@@ -100,7 +102,7 @@ LINEITEM = T.StructType([
 
 EVENTS = T.StructType([
     T.StructField("event_id", T.LongType(), True),
-    T.StructField("ts", T.TimestampType(), True),  # converted from ns-long
+    T.StructField("ts", T.TimestampType(), True),  # canonical (catalog)
     T.StructField("user_id", T.LongType(), True),
     T.StructField("event_type", T.StringType(), True),
     T.StructField("value", T.DoubleType(), True),

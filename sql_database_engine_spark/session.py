@@ -21,10 +21,11 @@ Scale notes (the design target is a 1000-executor cluster over
   real cluster it should be 2-3× total executor cores.
 - The session time zone is pinned to UTC so timestamp semantics match
   the DuckDB oracle and are not host-dependent.
-- ``spark.sql.legacy.parquet.nanosAsLong`` lets Spark 4 read the
-  driver's ``events.parquet`` (TIMESTAMP(NANOS) physical type, which
-  Spark otherwise rejects); the catalog converts the long to a proper
-  microsecond timestamp column on load.
+- ``spark.sql.legacy.parquet.nanosAsLong`` lets Spark 4 read an
+  ``events.parquet`` whose ``ts`` is TIMESTAMP(NANOS), one of the two
+  encodings the testdata has shipped (the other is ``timestamp[us]``;
+  Spark rejects nanos otherwise); the catalog converts the long to a
+  proper microsecond timestamp column on load.
 """
 
 from __future__ import annotations
@@ -46,8 +47,9 @@ RUNTIME_CONFS: dict[str, str] = {
     # at sf0.1). Operators whose per-row cost dwarfs their bytes
     # (array_intersect verification) set explicit repartitions at
     # those points instead.
-    # events.parquet stores ts as INT64 TIMESTAMP(NANOS,false); Spark 4
-    # refuses it unless read as a plain long (catalog converts to us).
+    # An events.parquet that stores ts as INT64 TIMESTAMP(NANOS,false)
+    # is refused by Spark 4 unless read as a plain long (catalog
+    # converts to us).
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     # Arrow makes createDataFrame/toPandas and pandas_udf exchange
     # columnar batches instead of pickled rows.

@@ -24,12 +24,10 @@ from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from ..session import tune
 
-#: The file stream source needs an explicit schema. events.parquet's
-#: ``ts`` physical encoding has varied across driver testdata
-#: generations (INT64 ns epoch under nanosAsLong vs timestamp[us]
-#: NTZ), so the raw schema is probed from a one-file batch read and
-#: normalized with the same rule as the batch catalog path
-#: (catalog._canonicalize).
+#: The file stream source needs an explicit schema: the catalog's read
+#: schema (catalog._read_schema), whose ``ts`` type follows the
+#: events.parquet footer, normalized afterwards by the same rule as the
+#: batch path (catalog._canonicalize).
 
 
 def _stream_dir(sf_dir: str) -> str:
@@ -54,13 +52,10 @@ def _stream_dir(sf_dir: str) -> str:
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The events table as an unbounded stream (file source)."""
-    import os
-
-    from ..catalog import _canonicalize
+    from ..catalog import _canonicalize, _read_schema
     tune(spark)
-    physical = spark.read.parquet(
-        os.path.join(sf_dir, "events.parquet")).schema
-    raw = spark.readStream.schema(physical).parquet(_stream_dir(sf_dir))
+    raw = (spark.readStream.schema(_read_schema(sf_dir, "events"))
+           .parquet(_stream_dir(sf_dir)))
     return _canonicalize("events", raw)
 
 

@@ -22,8 +22,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.streaming.stateful_processor import (
-    StatefulProcessor, StatefulProcessorHandle)
 from pyspark.sql import types as T
 
 STATE_SCHEMA = T.StructType([
@@ -89,55 +87,11 @@ def user_profiles(events: DataFrame) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# transformWithState: the Spark 4.x arbitrary-state processor API
-# ---------------------------------------------------------------------------
-
 TYPES_OUTPUT_SCHEMA = T.StructType([
     T.StructField("user_id", T.LongType()),
     T.StructField("n_event_types", T.LongType()),
     T.StructField("event_types_csv", T.StringType()),
 ])
-
-
-class DistinctTypesProcessor(StatefulProcessor):
-    """StatefulProcessor tracking the distinct event types seen per
-    user — the transformWithStateInPandas successor to
-    applyInPandasWithState: named state variables (ValueState here;
-    ListState/MapState/timers available), RocksDB-backed, evolvable
-    schema. The tracked set is emitted as a sorted CSV so the result
-    is deterministic regardless of arrival order.
-
-    NOT registered as a driver query: in this container the
-    TransformWithStateInPySpark *driver worker* process crashes during
-    state-schema validation even on the minimal upstream example
-    (rate source + ValueState counter, RocksDB provider set), so the
-    API cannot execute here — an environment limitation, not an
-    operator one. The implementation is kept as the documented
-    transformWithState surface; ``user_profiles`` above is the
-    executable stateful path and covers the same semantics under
-    applyInPandasWithState."""
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._types = handle.getValueState("types", "types STRING")
-
-    def handleInputRows(self, key, rows, timerValues):
-        seen = set()
-        prev = self._types.get()
-        if prev is not None and prev[0]:
-            seen.update(prev[0].split(","))
-        for pdf in rows:
-            seen.update(pdf["event_type"].dropna().tolist())
-        csv = ",".join(sorted(seen))
-        self._types.update((csv,))
-        yield pd.DataFrame({
-            "user_id": [key[0]],
-            "n_event_types": [len(seen)],
-            "event_types_csv": [csv if seen else None],
-        })
-
-    def close(self) -> None:
-        pass
 
 
 _TYPES_STATE_SCHEMA = T.StructType([T.StructField("types", T.StringType())])
@@ -165,8 +119,8 @@ def _update_type_set(key: tuple, pdfs: Iterable[pd.DataFrame],
 
 
 def user_event_type_sets(events: DataFrame) -> DataFrame:
-    """The same distinct-type-set operator on the executable stateful
-    API (applyInPandasWithState): per-user set state carried as a
+    """Per-user set of distinct event types as custom stateful
+    streaming state (applyInPandasWithState): the set is carried as a
     sorted CSV — order-insensitive, deterministic output."""
     return (
         events.select("user_id", "event_type")

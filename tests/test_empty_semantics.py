@@ -116,6 +116,13 @@ def test_no_pick_rows_from_empty_candidate_sets(spark, empty_facts_dir):
     assert _rows(spark, "concurrent_sessions_peak", empty_facts_dir) == []
 
 
+def test_date_spine_is_empty_over_empty_orders(spark, empty_facts_dir):
+    """With no dated order the span is NULL: the spine is empty, as in
+    DuckDB, and the span-cap guard does not raise on it."""
+    assert _rows(spark, "sql_recursive_date_spine_gapfill",
+                 empty_facts_dir) == []
+
+
 def test_ansi_ratio_guards_over_empty(spark, empty_facts_dir):
     """Ratios over empty denominators are NULL (DuckDB's x/0), not an
     ANSI DIVIDE_BY_ZERO crash."""

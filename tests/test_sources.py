@@ -4,12 +4,12 @@ from __future__ import annotations
 
 import pytest
 
-from pyspark.sql import functions as F
+from pyspark.sql import functions as F, types as T
 
 from sql_database_engine_spark import schemas
 from sql_database_engine_spark.sources.readers import read_source, write_sink
 from sql_database_engine_spark.tables import TABLE_NAMES
-from .conftest import SF_SMOKE
+from .conftest import SF_SMOKE, jobs_started
 
 
 @pytest.mark.parametrize("fmt", ["parquet", "csv", "json", "orc"])
@@ -107,17 +107,94 @@ def test_table_names_sync_with_schema_registry():
     assert TABLE_NAMES == tuple(schemas.TESTDATA_SCHEMAS)
 
 
+def _names_and_types(schema):
+    return [(f.name, f.dataType) for f in schema]
+
+
 @pytest.mark.parametrize("table", TABLE_NAMES)
 def test_declared_schema_matches_loaded_table(spark, table):
-    """Every declared testdata schema names the columns and types
-    ``catalog.load_table`` actually returns (nullability aside), so a
-    declaration that drifts from the parquet files fails here."""
+    """Every declared testdata schema names the columns and types Spark
+    infers from the parquet footers (nullability aside), after the
+    catalog's canonicalization, and ``catalog.load_table`` returns the
+    same. ``load_table`` reads with the declaration, so the reference
+    side must be the inferring read: a declaration that drifts from
+    the parquet files fails here."""
     from sql_database_engine_spark import catalog
 
+    inferred = catalog._canonicalize(
+        table, spark.read.parquet(f"{SF_SMOKE}/{table}.parquet")).schema
     loaded = catalog.load_table(spark, SF_SMOKE, table).schema
-    assert ([(f.name, f.dataType) for f in loaded]
-            == [(f.name, f.dataType)
-                for f in schemas.TESTDATA_SCHEMAS[table]])
+    assert (_names_and_types(schemas.TESTDATA_SCHEMAS[table])
+            == _names_and_types(inferred) == _names_and_types(loaded))
+
+
+@pytest.mark.parametrize("table", TABLE_NAMES)
+def test_load_table_starts_no_jobs(spark, table):
+    """A declared read needs no schema-inference job."""
+    from sql_database_engine_spark import catalog
+
+    _, jobs = jobs_started(spark, f"load-{table}",
+                           lambda: catalog.load_table(spark, SF_SMOKE, table))
+    assert jobs == 0
+
+
+def test_events_stream_starts_no_jobs(spark):
+    """The stream source takes the catalog's read schema; no batch
+    probe read runs."""
+    from sql_database_engine_spark.streaming.events_stream import events_stream
+
+    _, jobs = jobs_started(spark, "events-stream",
+                           lambda: events_stream(spark, SF_SMOKE))
+    assert jobs == 0
+
+
+def _rewrite_events_ts(dst_dir, ts_type, as_dir=False):
+    """The sf0.001 events table with ``ts`` cast to ``ts_type``, as one
+    file or as a directory of two parts."""
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(f"{SF_SMOKE}/events.parquet")
+    i = t.schema.get_field_index("ts")
+    t = t.set_column(i, "ts", t.column("ts").cast(ts_type))
+    dst = dst_dir / "events.parquet"
+    if as_dir:
+        dst.mkdir()
+        half = t.num_rows // 2
+        pq.write_table(t.slice(0, half), str(dst / "part-0.parquet"))
+        pq.write_table(t.slice(half), str(dst / "part-1.parquet"))
+    else:
+        pq.write_table(t, str(dst))
+    return str(dst_dir)
+
+
+@pytest.mark.parametrize("as_dir", [False, True], ids=["file", "dir"])
+def test_events_ns_encoding_loads_like_us(spark, tmp_path, as_dir):
+    """An events table whose ``ts`` is ``timestamp[ns]`` (read as a
+    long under nanosAsLong) loads with the same schema and rows as the
+    shipped ``timestamp[us]`` file, also when it is directory-shaped."""
+    import pyarrow as pa
+
+    from sql_database_engine_spark import catalog
+
+    ns_dir = _rewrite_events_ts(tmp_path, pa.timestamp("ns"), as_dir)
+    assert catalog._read_schema(ns_dir, "events")["ts"].dataType == T.LongType()
+    ns = catalog.load_table(spark, ns_dir, "events")
+    us = catalog.load_table(spark, SF_SMOKE, "events")
+    assert ns.schema == us.schema
+    rows = us.sort(*us.columns).collect()
+    assert len(rows) > 0
+    assert ns.sort(*ns.columns).collect() == rows
+
+
+def test_events_unknown_ts_encoding_raises(tmp_path):
+    """A third ``ts`` encoding is refused by name, not guessed at."""
+    import pyarrow as pa
+
+    from sql_database_engine_spark import catalog
+
+    tz_dir = _rewrite_events_ts(tmp_path, pa.timestamp("us", tz="UTC"))
+    with pytest.raises(ValueError, match=r"timestamp\[us, tz=UTC\]"):
+        catalog._read_schema(tz_dir, "events")
 
 
 def test_tables_module_is_spark_free():

@@ -287,11 +287,12 @@ def main() -> int:
         # FACTOR^2 — the property that keeps probe cost linear in
         # corpus size at a fixed batch.
         from pyspark.sql import functions as SF
+        from sql_database_engine_spark.catalog import load_table
         from sql_database_engine_spark.operators.similarity import (
             _ann_bucket_code)
 
         def probe_candidates(sf_dir: str) -> int:
-            emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+            emb = load_table(spark, sf_dir, "embeddings")
             coded = emb.select(
                 "vec_id", _ann_bucket_code(
                     SF.transform("embedding",
