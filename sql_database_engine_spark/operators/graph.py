@@ -535,10 +535,12 @@ def sssp_weighted_brands(spark: SparkSession, sf_dir: str) -> DataFrame:
     composes with the same salted-hub remedy as every other round.
     """
     cat = Catalog(spark, sf_dir)
-    # Each relaxation round references the edge relation; a LAZY
-    # localCheckpoint materializes the basket-join derivation once at
-    # first action (GraphX cache-the-edges discipline) with no job at
-    # construction time.
+    # Each relaxation round references the edge relation; a lazy
+    # localCheckpoint materializes the basket-join derivation once
+    # (GraphX cache-the-edges discipline). Under AQE it is not job-free:
+    # asking for the checkpoint's RDD runs the shuffle and broadcast
+    # stages beneath it while the query is built (23 build jobs with
+    # the round checkpoints, tests/test_build_jobs.py).
     edges = _weighted_edges(cat).localCheckpoint(eager=False)
     nodes = edges.select(F.col("src").alias("node")).distinct()
     src = nodes.agg(F.min("node").alias("s"))

@@ -2,10 +2,9 @@
 
 Embeddings are ``array<float>`` columns; all arithmetic casts to
 double first (float→double widening is bit-exact) and accumulates as
-a sequential left fold — since round 11 evaluated by Arrow/NumPy
-kernels (see the kernel section below) that replicate the former
-JVM ``aggregate(zip_with(...))`` fold's exact IEEE operation order,
-batch-vectorized instead of interpreted per element. The sequential
+a sequential left fold, the JVM ``aggregate(zip_with(...))`` of
+:func:`dot` / :func:`cosine` / :func:`l2sq` (see the scoring section
+below for the one Arrow kernel that replicates it). The sequential
 sum over a 64-element array is deterministic, and DuckDB's list
 functions fold the same way, so cosine values round-trip the oracle
 after a guard rounding to 6 decimals — a quantum wide enough to
@@ -27,6 +26,7 @@ Scale story:
 
 from __future__ import annotations
 
+import json
 from decimal import ROUND_HALF_UP, Decimal
 from typing import Iterator, Tuple
 
@@ -41,25 +41,63 @@ from ..catalog import Catalog
 from . import query
 
 
-def _as_double(col: Column) -> Column:
-    return F.transform(col, lambda x: x.cast("double"))
+# The folds below take SQL text of their inputs (a column name or an
+# expression over the row, e.g. "slice(embedding, 1, 16)") and build
+# with ONE ``F.expr``: the same fold built from PySpark Column calls
+# cost 27 ms (dot) to 88 ms (cosine) of CPU per call, since every
+# Column call makes JVM round trips. Their lambda variables are x, y, acc, t,
+# aa, bb, s and p, so an input column with one of those names would be
+# shadowed.
 
 
-def dot(a: Column, b: Column) -> Column:
-    """Sequential-fold dot product of two double arrays (JVM-side)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+def _dot_sql(a: str, b: str, finish: str = "") -> str:
+    """Sequential-fold dot product, each element cast to DOUBLE first:
+    ((0.0 + a0*b0) + a1*b1) + ... ``finish`` is an optional
+    ``", name -> expr"`` finish lambda."""
+    return (f"aggregate(zip_with({a}, {b}, (x, y) -> "
+            f"CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), 0D, (acc, t) -> acc + t"
+            f"{finish})")
 
 
-def cosine(a: Column, b: Column) -> Column:
-    """JVM reference implementation the Arrow kernels replicate —
-    kept as the executable specification;
-    tests/test_arrow_kernels.py pins the kernels bit-exactly
-    against it on the real fixtures."""
-    return dot(a, b) / (F.sqrt(dot(a, a)) * F.sqrt(dot(b, b)))
+def _nan_div_sql(num: str, den: str) -> str:
+    """``num / den``, NaN where ``den`` is 0 — the IEEE 0/0 the Arrow
+    kernel returns, where ANSI division would raise DIVIDE_BY_ZERO."""
+    return (f"CASE WHEN {den} = 0 THEN CAST('NaN' AS DOUBLE) "
+            f"ELSE {num} / ({den}) END")
+
+
+def dot(a: str, b: str) -> Column:
+    """Sequential-fold dot product of two numeric arrays (JVM-side)."""
+    return F.expr(_dot_sql(a, b))
+
+
+def cosine(a: str, b: str) -> Column:
+    """dot(a,b) / (sqrt(dot(a,a)) * sqrt(dot(b,b))), in that op order.
+
+    The norms fold first and reach the division as finish-lambda
+    values, so each of the three folds runs once per row even though
+    the zero test reads the denominator twice. A zero vector scores
+    NaN (not an ANSI error), as :data:`_cos_pair` does; DuckDB's
+    ``list_cosine_similarity`` returns -1.0 there, so that case is
+    outside the oracle contract. A NULL vector or element scores
+    NULL."""
+    div = _nan_div_sql(_dot_sql(a, b), "sqrt(aa) * sqrt(bb)")
+    return F.expr(_dot_sql(a, a, ", aa -> " + _dot_sql(b, b, ", bb -> " + div)))
+
+
+def _cosine_normed(a: str, b: str, na: str, nb: str) -> Column:
+    """:func:`cosine` over precomputed norms ``na`` and ``nb``
+    (``sqrt(dot(a, a))``): dot(a,b) / (na * nb), NaN where it is 0/0."""
+    return F.expr(_nan_div_sql(_dot_sql(a, b), f"{na} * {nb}"))
+
+
+def l2sq(a: str, b: str, lanes: str = "bigint") -> Column:
+    """Sequential-fold squared L2 distance, each element cast to
+    ``lanes`` first: "bigint" (exact int64, any order would do) or
+    "double" (left-assoc from 0.0, the :func:`dot` order)."""
+    return F.expr(f"aggregate(zip_with({a}, {b}, (x, y) -> "
+                  f"CAST(x AS {lanes}) - CAST(y AS {lanes})), "
+                  f"CAST(0 AS {lanes}), (acc, t) -> acc + t * t)")
 
 
 #: DuckDB twin of :func:`cosine` (list_cosine_similarity folds the
@@ -80,16 +118,48 @@ def _dlit(x: float) -> str:
     return r if "e" in r or "E" in r else r + "e0"
 
 
-# --- Arrow-vectorized scoring kernels -------------------------------
+def _planes_literal(planes: "np.ndarray") -> str:
+    """SQL text of a plane matrix as ONE ``array<array<double>>``
+    literal: a JSON string that ``from_json`` parses and constant
+    folding turns into a literal (``repr`` digits parse back
+    bit-exactly, pinned by
+    tests/test_conversion_pins.py::test_planes_json_literal_roundtrip_bitexact)."""
+    return (f"from_json('{json.dumps(np.asarray(planes).tolist())}', "
+            f"'array<array<double>>')")
+
+
+def _plane_code(vec: str, planes: "np.ndarray") -> Column:
+    """Sign-bit hyperplane code as ONE fused fold: bit i is set when
+    ``dot(vec, planes[i]) > 0``. The vector is cast to double once and
+    rides in the fold state; the planes fold last-to-first, each
+    shifting the code left one bit, so plane i lands on bit i. A NULL
+    projection (NULL vector or element) leaves its bit 0."""
+    return F.expr(
+        f"aggregate({_planes_literal(np.asarray(planes)[::-1])}, "
+        f"named_struct('v', transform({vec}, x -> CAST(x AS DOUBLE)), "
+        f"'code', 0L), (s, p) -> named_struct('v', s.v, 'code', "
+        f"shiftleft(s.code, 1) | IF({_dot_sql('s.v', 'p')} > 0, 1L, 0L)), "
+        f"s -> s.code)")
+
+
+# --- Scoring: fused folds, one Arrow kernel ---------------------------
 #
-# The per-pair / per-row vector arithmetic below used to run through
-# Catalyst higher-order functions (zip_with + aggregate). HOF lambdas
-# are evaluated INTERPRETED, one boxed element at a time — profiled at
-# sf0.1 as the dominant cost of every brute-force scoring pass (and a
-# flat 64/1536-term codegen unroll measured worse still: the generated
-# methods blow past the JIT limits and fall back to Volcano eval). The
-# guide-§4.2 shape wins: keep Spark joins/aggregates, hand each Arrow
-# batch to NumPy, preserve the JVM fold's exact IEEE evaluation order:
+# Vector arithmetic runs as the fused JVM folds above by default:
+# ``dot``, ``cosine`` (slice both sides for a prefix, as matryoshka
+# does), ``l2sq`` over BIGINT or double lanes, and the plane codes,
+# which cast each vector once per row and take their planes as one
+# parsed literal. Measured as process-tree CPU (driver, JVM and Python
+# workers; PERF.md "One fused vector-scoring path"), the folds tie or
+# beat the Arrow pair kernels at every site but the two 50-anchor
+# cosine scans, where ``_cos_pair`` won its interleaved A/B and stays.
+# There is no dispatcher: each call site's choice between ``cosine``
+# and ``_cos_pair`` is the whole decision. PQ's dim-8 subspace
+# distances stay a flat unroll (``_l2sq_unrolled``), which beat both
+# the fold and a kernel (64+-term unrolls overflow the JIT limits and
+# fall back to interpreted eval), and Lloyd assignment keeps its
+# argmin kernel.
+#
+# ``_cos_pair`` keeps the fold's exact IEEE evaluation order:
 #
 #   - products/sums accumulate LEFT-ASSOCIATIVELY starting from 0.0,
 #     exactly like aggregate(zip_with(a, b, x*y), 0.0, acc+x) —
@@ -98,10 +168,6 @@ def _dlit(x: float) -> str:
 #     (float32→float64 widening is bit-exact);
 #   - NULL inputs yield NULL outputs (masked Arrow arrays), NaNs flow
 #     through IEEE comparisons exactly as the JVM's.
-#
-# Integer-lane kernels (squared-L2 over micro-scaled BIGINTs) need no
-# order discipline at all: int64 adds are exact, so any summation
-# order gives the bit-identical result.
 
 #: rows-per-chunk inside a kernel: bounds temporaries (e.g. the
 #: n×k×64 Lloyd distance cube) regardless of Arrow batch size.
@@ -152,60 +218,11 @@ def _drop_nan_lanes(ok: "np.ndarray", nanres: "np.ndarray",
         ok[np.flatnonzero(ok)[bad]] = False
 
 
-def _plane_code_udf(planes: "np.ndarray"):
-    """Sign-bit hyperplane code as ONE Arrow kernel — the vectorized
-    twin of the per-plane zip_with/aggregate fold: per plane, the dot
-    product accumulates left-associatively in float64 (identical IEEE
-    order, so identical sign bits), and ``proj > 0`` mirrors the
-    ``WHEN proj > 0`` gate (NULL/NaN projections → bit 0, matching
-    the fold's ``otherwise(0)``; a fully NULL vector → code 0)."""
-    planes64 = np.asarray(planes, dtype=np.float64)
-
-    @F.pandas_udf(LongType())
-    def code(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for sv in it:
-            out = np.zeros(len(sv), dtype=np.int64)
-            ok = sv.notna().to_numpy()
-            if ok.any():
-                X = _stack64(sv[ok])
-                c = np.zeros(X.shape[0], dtype=np.int64)
-                for i in range(planes64.shape[0]):
-                    p = planes64[i]
-                    proj = np.zeros(X.shape[0])
-                    for j in range(X.shape[1]):
-                        proj = proj + X[:, j] * p[j]
-                    c = c | ((proj > 0).astype(np.int64) << i)
-                out[ok] = c
-            yield pd.Series(out)
-
-    return code
-
-
-def _make_dot_pair():
-    """Raw sequential dot of two vector columns, row-wise (double)."""
-
-    @F.pandas_udf(DoubleType())
-    def dotp(it: Iterator[Tuple[pd.Series, pd.Series]]
-             ) -> Iterator[pd.Series]:
-        for sa, sb in it:
-            vals = np.zeros(len(sa))
-            ok = (sa.notna() & sb.notna()).to_numpy()
-            if ok.any():
-                X, Y = _stack64(sa[ok]), _stack64(sb[ok])
-                v = _seq_dot(X, Y)
-                vals[ok] = v
-                _drop_nan_lanes(ok, np.isnan(v), X, Y)
-            yield _masked(vals, ok)
-
-    return dotp
-
-
-def _make_cos_pair(dim: int | None = None):
+def _make_cos_pair():
     """Raw cosine of two vector columns, row-wise: dot(a,b) /
     (sqrt(dot(a,a)) * sqrt(dot(b,b))) in that exact op order — the
     JVM ``cosine`` bit for bit (0/0 stays NaN, NULL input stays
-    NULL). ``dim`` scores a prefix slice (matryoshka), equal to the
-    former cosine-over-``slice(...)`` since slice(a,1,d)[j] ≡ a[j]."""
+    NULL)."""
 
     @F.pandas_udf(DoubleType())
     def cosp(it: Iterator[Tuple[pd.Series, pd.Series]]
@@ -215,8 +232,6 @@ def _make_cos_pair(dim: int | None = None):
             ok = (sa.notna() & sb.notna()).to_numpy()
             if ok.any():
                 X, Y = _stack64(sa[ok]), _stack64(sb[ok])
-                if dim is not None:
-                    X, Y = X[:, :dim], Y[:, :dim]
                 with np.errstate(invalid="ignore", divide="ignore"):
                     v = (_seq_dot(X, Y)
                          / (np.sqrt(_seq_dot(X, X))
@@ -230,68 +245,13 @@ def _make_cos_pair(dim: int | None = None):
     return cosp
 
 
-def _make_l2_pair():
-    """Exact integer squared-L2 of two BIGINT-lane vector columns,
-    row-wise — int64 adds are exact, so no order discipline needed."""
-
-    @F.pandas_udf(LongType())
-    def l2p(it: Iterator[Tuple[pd.Series, pd.Series]]
-            ) -> Iterator[pd.Series]:
-        for sa, sb in it:
-            vals = np.zeros(len(sa), dtype=np.int64)
-            ok = (sa.notna() & sb.notna()).to_numpy()
-            if ok.any():
-                A = np.stack(sa[ok].to_numpy())
-                B = np.stack(sb[ok].to_numpy())
-                if A.dtype.kind == "f" or B.dtype.kind == "f":
-                    # A NULL element inside a BIGINT-lane list forces
-                    # Arrow to float64-with-NaN; without this mask the
-                    # astype below would silently turn NaN into
-                    # INT64_MIN garbage distances (ADVICE r11). Clean
-                    # batches stack straight to int64 and never enter.
-                    bad = (np.isnan(A).any(axis=1)
-                           | np.isnan(B).any(axis=1))
-                    if bad.any():
-                        ok[np.flatnonzero(ok)[bad]] = False
-                        A, B = A[~bad], B[~bad]
-                d = A.astype(np.int64) - B.astype(np.int64)
-                vals[ok] = (d * d).sum(axis=1)
-            yield pd.Series(pd.arrays.IntegerArray(vals, ~ok))
-
-    return l2p
-
-
-def _make_l2d_pair():
-    """Squared L2 over double lanes, row-wise — the float twin of
-    :func:`_make_l2_pair`, with the left-assoc fold order of the JVM
-    ``aggregate(zip_with(a, b, (x-y)*(x-y)), 0.0, acc+x)`` form."""
-
-    @F.pandas_udf(DoubleType())
-    def l2d(it: Iterator[Tuple[pd.Series, pd.Series]]
-            ) -> Iterator[pd.Series]:
-        for sa, sb in it:
-            vals = np.zeros(len(sa))
-            ok = (sa.notna() & sb.notna()).to_numpy()
-            if ok.any():
-                X, Y = _stack64(sa[ok]), _stack64(sb[ok])
-                acc = np.zeros(X.shape[0])
-                for j in range(X.shape[1]):
-                    d = X[:, j] - Y[:, j]
-                    acc = acc + d * d
-                vals[ok] = acc
-                _drop_nan_lanes(ok, np.isnan(acc), X, Y)
-            yield _masked(vals, ok)
-
-    return l2d
-
-
 def _l2sq_unrolled(a: Column, b: Column, dim: int) -> Column:
     """Exact integer squared-L2 as a small UNROLLED JVM expression —
     for tiny fixed dims (PQ's 8-dim subspaces) where whole-stage
     codegen handles the flat 8-term sum easily and the Arrow kernel's
     per-batch round trip is pure overhead (measured r11: PQ subspace
     scoring ~2x faster unrolled than either the interpreted HOF fold
-    or the Arrow kernel; 64+-term unrolls measured WORSE — kernel
+    or the Arrow kernel; 64+-term unrolls measured WORSE — scoring
     section note). ``try_element_at`` keeps zip_with's null-padding
     semantics instead of an ANSI index error."""
     t = F.try_element_at(a, F.lit(1)) - F.try_element_at(b, F.lit(1))
@@ -302,12 +262,8 @@ def _l2sq_unrolled(a: Column, b: Column, dim: int) -> Column:
     return acc
 
 
-#: Shared kernel singletons (one serialized closure per session).
-_dot_pair = _make_dot_pair()
+#: The one Arrow scoring kernel (one serialized closure per session).
 _cos_pair = _make_cos_pair()
-_cos_pair16 = _make_cos_pair(dim=16)
-_l2_pair = _make_l2_pair()
-_l2d_pair = _make_l2d_pair()
 
 
 @query(
@@ -332,13 +288,7 @@ def cosine_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = Catalog(spark, sf_dir).embeddings
     q = (e.filter(F.col("vec_id") == 0)
          .select(F.col("embedding").alias("qv")))
-    # r12 width-rule row-count clause (VERDICT r11 item 8, A/B'd): on
-    # this sub-second single-query-vector scan (~3k scored rows) the
-    # Arrow kernel's fixed per-batch dispatch exceeds its win — the
-    # JVM fold measures 0.32 vs 0.40 s back-to-back, bit-identical
-    # rows. Kernels stay on the pair-join paths where row counts are
-    # candidate-bounded, not corpus-bounded.
-    sim = cosine(_as_double(F.col("embedding")), _as_double(F.col("qv")))
+    sim = cosine("embedding", "qv")
     return (
         e.filter(F.col("vec_id") != 0)
         .crossJoin(F.broadcast(q))
@@ -368,7 +318,7 @@ def embedding_norms_per_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = Catalog(spark, sf_dir).embeddings.filter(
         F.col("embedding").isNotNull())
     norm_micros = F.round(
-        F.sqrt(_dot_pair(F.col("embedding"), F.col("embedding")))
+        F.sqrt(dot("embedding", "embedding"))
         * 1_000_000).cast("long")
     return (
         e.groupBy("label")
@@ -389,16 +339,10 @@ _NEARDUP_BAND_BITS = 6
 _NEARDUP_BAND_MASK = (1 << _NEARDUP_BAND_BITS) - 1
 
 
-#: Arrow kernel computing the 24-plane sign code (was a per-plane
-#: interpreted zip_with/aggregate fold — see the kernel section).
-_neardup_code_kernel = _plane_code_udf(_NEARDUP_PLANES)
-
-
 def _neardup_code(vec: Column) -> Column:
-    """Sign bits of the hyperplane projections — same sequential
-    left-assoc dot product the DuckDB twin folds, evaluated as one
-    Arrow kernel instead of 24 interpreted HOF folds per row."""
-    return _neardup_code_kernel(vec)
+    """Sign bits of the 24 hyperplane projections — same sequential
+    left-assoc dot product the DuckDB twin folds, as one fused fold."""
+    return _plane_code(vec, _NEARDUP_PLANES)
 
 
 def _neardup_code_sql(embedding: str = "embedding") -> str:
@@ -452,9 +396,8 @@ def embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = Catalog(spark, sf_dir).embeddings.filter(
         F.col("embedding").isNotNull())
     base = (e.select("vec_id", F.col("embedding").alias("v"))
-            .withColumn("norm",
-                        F.sqrt(_dot_pair(F.col("v"), F.col("v"))))
-            .withColumn("code", _neardup_code(F.col("v"))))
+            .withColumn("norm", F.sqrt(dot("v", "v")))
+            .withColumn("code", _neardup_code("v")))
     bands = base.select(
         "vec_id",
         F.explode(F.array(*[
@@ -477,8 +420,7 @@ def embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
                      F.col("v").alias("v_a"), F.col("norm").alias("n_a"))
     vb = base.select(F.col("vec_id").alias("vec_b"),
                      F.col("v").alias("v_b"), F.col("norm").alias("n_b"))
-    sim = (_dot_pair(F.col("v_a"), F.col("v_b"))
-           / (F.col("n_a") * F.col("n_b")))
+    sim = _cosine_normed("v_a", "v_b", "n_a", "n_b")
     return (
         cand.join(va, "vec_a").join(vb, "vec_b")
         .withColumn("cos_sim", F.round(sim, 6))
@@ -493,14 +435,10 @@ def embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 _ANN_PLANES = np.random.RandomState(13).randn(8, 64)
 
 
-#: Arrow kernel for the 8-plane ANN bucket code.
-_ann_bucket_code_kernel = _plane_code_udf(_ANN_PLANES)
-
-
 def _ann_bucket_code(vec: Column) -> Column:
     """Sign-bit bucket code of the 8 ANN hyperplane projections —
-    same sequential fold as :func:`_neardup_code`, one Arrow kernel."""
-    return _ann_bucket_code_kernel(vec)
+    same fused fold as :func:`_neardup_code`."""
+    return _plane_code(vec, _ANN_PLANES)
 
 
 def _ann_bucket_sql(embedding: str = "embedding") -> str:
@@ -569,7 +507,7 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = Catalog(spark, sf_dir).embeddings.filter(
         F.col("embedding").isNotNull())
     coded = e.select("vec_id", "label", "embedding",
-                     _ann_bucket_code(F.col("embedding")).alias("bucket"))
+                     _ann_bucket_code("embedding").alias("bucket"))
     queries_df = coded.filter(F.col("vec_id") < 20).select(
         F.col("vec_id").alias("q_id"),
         F.col("embedding").alias("q_vec"),
@@ -578,8 +516,7 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         queries_df.join(coded, F.col("q_bucket") == F.col("bucket"))
         .filter(F.col("vec_id") != F.col("q_id"))
         .select("q_id", "vec_id",
-                F.round(_cos_pair(F.col("q_vec"), F.col("embedding")),
-                        6).alias("cos_sim"))
+                F.round(cosine("q_vec", "embedding"), 6).alias("cos_sim"))
     )
     w = W.partitionBy("q_id").orderBy(F.col("cos_sim").desc(), "vec_id")
     return (cands.withColumn("rn", F.row_number().over(w))
@@ -805,9 +742,8 @@ def ann_lsh_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = Catalog(spark, sf_dir).embeddings.filter(
         F.col("embedding").isNotNull())
     base = (e.select("vec_id", F.col("embedding").alias("v"))
-            .withColumn("norm",
-                        F.sqrt(_dot_pair(F.col("v"), F.col("v"))))
-            .withColumn("bucket", _ann_bucket_code(F.col("v"))))
+            .withColumn("norm", F.sqrt(dot("v", "v")))
+            .withColumn("bucket", _ann_bucket_code("v")))
     probes = F.array(F.col("bucket"), *[
         F.col("bucket").bitwiseXOR(F.lit(1 << i)) for i in range(8)])
     queries_df = (base.filter(F.col("vec_id") < 20)
@@ -818,8 +754,8 @@ def ann_lsh_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         queries_df.join(base, F.col("probe_bucket") == F.col("bucket"))
         .filter(F.col("vec_id") != F.col("q_id"))
         .select("q_id", "vec_id",
-                F.round(_dot_pair(F.col("qv"), F.col("v"))
-                        / (F.col("qnorm") * F.col("norm")), 6).alias("cos_sim"))
+                F.round(_cosine_normed("qv", "v", "qnorm", "norm"),
+                        6).alias("cos_sim"))
         .distinct()
     )
     w = W.partitionBy("q_id").orderBy(F.col("cos_sim").desc(), "vec_id")
@@ -1140,7 +1076,7 @@ def knn_join_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
                   & F.col("embedding").isNotNull())
          .select(F.col("vec_id").alias("qid"),
                  F.col("embedding").alias("qv")))
-    sim = _cos_pair(F.col("embedding"), F.col("qv"))
+    sim = cosine("embedding", "qv")
     scored = (e.crossJoin(F.broadcast(q))
               .filter(F.col("vec_id") != F.col("qid"))
               .select("qid", "vec_id", F.round(sim, 6).alias("cos_sim")))
@@ -1233,13 +1169,12 @@ def jl_projection_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.col("embedding").alias("eb"))
     pairs = (a.filter((F.col("vec_a") < 100) & (F.col("vec_a") % 2 == 0))
              .join(b, F.col("vec_b") == F.col("vec_a") + 1))
-    ea, eb = _as_double(F.col("ea")), _as_double(F.col("eb"))
-    orig_d2 = F.round(dot(ea, ea) - F.lit(2.0) * dot(ea, eb)
-                      + dot(eb, eb), 6)
+    orig_d2 = F.round(dot("ea", "ea") - F.lit(2.0) * dot("ea", "eb")
+                      + dot("eb", "eb"), 6)
     proj_terms = None
     for row in _jl_signs():
-        s = F.array(*[F.lit(float(x)) for x in row])
-        diff = dot(ea, s) - dot(eb, s)
+        s = "array(" + ", ".join(f"{float(x)!r}D" for x in row) + ")"
+        diff = dot("ea", s) - dot("eb", s)
         term = diff * diff
         proj_terms = term if proj_terms is None else proj_terms + term
     proj_d2 = F.round(proj_terms, 6)
@@ -1302,7 +1237,7 @@ def ann_recall_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = (e.filter(F.col("vec_id") < 10)
          .select(F.col("vec_id").alias("qid"),
                  F.col("embedding").alias("qv")))
-    sim = _cos_pair(F.col("embedding"), F.col("qv"))
+    sim = cosine("embedding", "qv")
     scored = (e.crossJoin(F.broadcast(q))
               .filter(F.col("vec_id") != F.col("qid"))
               .select("qid", "vec_id", F.round(sim, 6).alias("cos_sim")))
@@ -1323,15 +1258,13 @@ def ann_recall_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # IVF and PQ are L2 quantizers (integer-L2 since their oracle
     # conversion), so their anchor is the exact-L2 top-3.
-    l2 = _l2d_pair  # Arrow kernel, same left-assoc fold order
-
     basev = e.select("vec_id", F.col("embedding").alias("v"))
     ql2 = (basev.filter(F.col("vec_id") < 10)
            .select(F.col("vec_id").alias("qid"), F.col("v").alias("qv")))
     l2_scored = (basev.crossJoin(F.broadcast(ql2))
                  .filter(F.col("vec_id") != F.col("qid"))
                  .select("qid", "vec_id",
-                         F.round(l2(F.col("v"), F.col("qv")), 6).alias("d")))
+                         F.round(l2sq("v", "qv", "double"), 6).alias("d")))
     rn_l2 = F.row_number().over(
         W.partitionBy("qid").orderBy(F.col("d").asc(), "vec_id"))
     exact_l2 = (l2_scored.withColumn("rn", rn_l2).filter(F.col("rn") <= 3)
@@ -1432,7 +1365,7 @@ def filtered_vector_search(spark: SparkSession, sf_dir: str) -> DataFrame:
          .select(F.col("vec_id").alias("qid"),
                  F.col("embedding").alias("qv")))
     filtered = e.filter(F.col("label") == 3)
-    sim = _cos_pair(F.col("embedding"), F.col("qv"))
+    sim = cosine("embedding", "qv")
     scored = (filtered.crossJoin(F.broadcast(q))
               .filter(F.col("vec_id") != F.col("qid"))
               .select("qid", "vec_id", "label",
@@ -1523,21 +1456,22 @@ def mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = Catalog(spark, sf_dir).embeddings
     q = (e.filter(F.col("vec_id") == 0)
          .select(F.col("embedding").alias("qv")))
-    qs = _cos_pair(F.col("embedding"), F.col("qv"))
+    qs = cosine("embedding", "qv")
     # The greedy steps reference this subtree ~66 times once the
     # unroll compounds, and TakeOrdered is NOT an exchange — exchange
     # reuse does not dedupe it, so without truncation the corpus
-    # top-k re-executes per reference (measured: 66 copies). A LAZY
-    # localCheckpoint fixes it: construction stays job-free (the
-    # leading_digit_profile rule), and at first action the 8-row pool
-    # materializes once and every reference shares the cached RDD.
+    # top-k re-executes per reference (measured: 66 copies). A lazy
+    # localCheckpoint fixes it: the 8-row pool materializes once and
+    # every reference shares the cached RDD. It is not job-free under
+    # AQE: the query-vector broadcast beneath it runs one job while
+    # the query is built (tests/test_build_jobs.py).
     pool = (e.filter(F.col("vec_id") != 0)
             .crossJoin(F.broadcast(q))
             .select("vec_id", "embedding", F.round(qs, 6).alias("qsim"))
             .orderBy(F.col("qsim").desc(), "vec_id")
             .limit(8)).localCheckpoint(eager=False)
 
-    ps = _cos_pair(F.col("ea"), F.col("eb"))
+    ps = cosine("ea", "eb")
     pa = pool.select(F.col("vec_id").alias("a"),
                      F.col("embedding").alias("ea"))
     pb = pool.select(F.col("vec_id").alias("b"),
@@ -1633,15 +1567,13 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     # IEEE arithmetic (dot / (sqrt(aa) * sqrt(bb)), same op order).
     corpus = (e.select("vec_id", "label",
                        F.col("embedding").alias("v"))
-              .withColumn("nv",
-                          F.sqrt(_dot_pair(F.col("v"), F.col("v")))))
+              .withColumn("nv", F.sqrt(dot("v", "v"))))
     anchors = (corpus.filter(F.col("vec_id") < 16)
                .select(F.col("vec_id").alias("aid"),
                        F.col("label").alias("alab"),
                        F.col("v").alias("av"),
                        F.col("nv").alias("nav")))
-    sim = (_dot_pair(F.col("v"), F.col("av"))
-           / (F.col("nv") * F.col("nav")))
+    sim = _cosine_normed("v", "av", "nv", "nav")
     scored = (corpus.crossJoin(F.broadcast(anchors))
               .filter(F.col("vec_id") != F.col("aid"))
               .select("aid", "alab", "vec_id", "label",
@@ -1715,7 +1647,7 @@ def knn_label_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
          .select(F.col("vec_id").alias("qid"),
                  F.col("label").alias("qlab"),
                  F.col("embedding").alias("qv")))
-    sim = _cos_pair(F.col("embedding"), F.col("qv"))
+    sim = cosine("embedding", "qv")
     rn = F.row_number().over(
         W.partitionBy("qid").orderBy(F.round(sim, 6).desc(), "vec_id"))
     ranked = (e.crossJoin(F.broadcast(q))
@@ -2002,7 +1934,7 @@ def vector_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
                   & F.col("embedding").isNotNull())
          .select(F.col("vec_id").alias("qid"),
                  F.col("embedding").alias("qv")))
-    sim = _cos_pair(F.col("embedding"), F.col("qv"))
+    sim = cosine("embedding", "qv")
     scored = (e.crossJoin(F.broadcast(q))
               .filter(F.col("vec_id") != F.col("qid"))
               .select("qid", "vec_id",
@@ -2087,10 +2019,8 @@ def matryoshka_prefix_recall(spark: SparkSession,
     q = (e.filter(F.col("vec_id") < 8)
          .select(F.col("vec_id").alias("qid"),
                  F.col("embedding").alias("qv")))
-    full_sim = _cos_pair(F.col("embedding"), F.col("qv"))
-    # prefix cosine: slice(a,1,16)[j] ≡ a[j] for j <= 16, so the
-    # 16-dim kernel scores the identical prefix without the slices
-    pfx_sim = _cos_pair16(F.col("embedding"), F.col("qv"))
+    full_sim = cosine("embedding", "qv")
+    pfx_sim = cosine("slice(embedding, 1, 16)", "slice(qv, 1, 16)")
     scored = (e.crossJoin(F.broadcast(q))
               .filter(F.col("vec_id") != F.col("qid"))
               .select("qid", "vec_id",
@@ -2195,7 +2125,7 @@ def ndcg_at_10_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
          .select(F.col("vec_id").alias("qid"),
                  F.col("embedding").alias("qv"),
                  F.col("label").alias("qlabel")))
-    sim = _cos_pair(F.col("embedding"), F.col("qv"))
+    sim = cosine("embedding", "qv")
     ranked = (e.crossJoin(F.broadcast(q))
               .filter(F.col("vec_id") != F.col("qid"))
               .select("qid",
@@ -2540,13 +2470,11 @@ def dot_vs_cosine_rank_agreement(spark: SparkSession,
     # measure 0.42 vs 0.53 s back-to-back, bit-identical rows.
     # ndcg_at_10_eval A/B'd the other way (kernel 0.57 vs fold 0.64 —
     # 8 labeled queries amortize one dispatch) and keeps its kernel.
-    v = _as_double(F.col("embedding"))
-    av = _as_double(F.col("av"))
     scored = (e.filter(F.col("vec_id") >= 3)
               .crossJoin(F.broadcast(anchors))
               .select("anchor_id", "vec_id",
-                      F.round(dot(v, av), 6).alias("dot6"),
-                      F.round(cosine(v, av), 6).alias("cos6")))
+                      F.round(dot("embedding", "av"), 6).alias("dot6"),
+                      F.round(cosine("embedding", "av"), 6).alias("cos6")))
     wd = W.partitionBy("anchor_id").orderBy(F.col("dot6").desc(),
                                             "vec_id")
     wc = W.partitionBy("anchor_id").orderBy(F.col("cos6").desc(),
@@ -2625,6 +2553,8 @@ def knn_confusion_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
          .select(F.col("vec_id").alias("qid"),
                  F.col("embedding").alias("qv"),
                  F.col("label").alias("true_label")))
+    # 50 anchors × corpus: the Arrow kernel won 10/10 interleaved
+    # CPU pairs against the fused cosine (PERF.md).
     sim = _cos_pair(F.col("embedding"), F.col("qv"))
     scored = (e.filter((F.col("vec_id") >= 50)
                        & F.col("label").isNotNull())
@@ -2764,8 +2694,7 @@ def ann_ivf_staged_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.expr("transform(embedding, x -> "
                         "CAST(ROUND(CAST(x AS DOUBLE) * 1000000) AS BIGINT))")
                  .alias("qe")))
-    d_qc = F.expr("aggregate(zip_with(qe, c, (x, y) -> (x - y) * (x - y)), "
-                  "0L, (acc, v) -> acc + v)")
+    d_qc = l2sq("qe", "c")
     rn = F.row_number().over(
         W.partitionBy("q_id").orderBy(F.col("d"), F.col("cid")))
     probes = (q.crossJoin(F.broadcast(cents))
@@ -2783,7 +2712,7 @@ def ann_ivf_staged_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = (assigns.join(F.broadcast(probes), "cid")
             .filter(F.col("vec_id") != F.col("q_id"))
             .select("q_id", "vec_id",
-                    _l2_pair(F.col("qe"), F.col("e")).alias("d")))
+                    l2sq("qe", "e").alias("d")))
     rnk = F.row_number().over(
         W.partitionBy("q_id").orderBy(F.col("d"), F.col("vec_id")))
     return (cand.withColumn("rank", rnk)
@@ -3059,8 +2988,7 @@ def ann_ivf_staged_append_probe(spark: SparkSession,
                  F.expr("transform(embedding, x -> "
                         "CAST(ROUND(CAST(x AS DOUBLE) * 1000000) AS BIGINT))")
                  .alias("qe")))
-    d_qc = F.expr("aggregate(zip_with(qe, c, (x, y) -> (x - y) * (x - y)), "
-                  "0L, (acc, v) -> acc + v)")
+    d_qc = l2sq("qe", "c")
     rn = F.row_number().over(
         W.partitionBy("q_id").orderBy(F.col("d"), F.col("cid")))
     probes = (q.crossJoin(F.broadcast(cents))
@@ -3075,7 +3003,7 @@ def ann_ivf_staged_append_probe(spark: SparkSession,
     cand = (assigns.join(F.broadcast(probes), "cid")
             .filter(F.col("vec_id") != F.col("q_id"))
             .select("q_id", "vec_id",
-                    _l2_pair(F.col("qe"), F.col("e")).alias("d")))
+                    l2sq("qe", "e").alias("d")))
     rnk = F.row_number().over(
         W.partitionBy("q_id").orderBy(F.col("d"), F.col("vec_id")))
     return (cand.withColumn("rank", rnk)
@@ -3189,7 +3117,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = (inverted.join(F.broadcast(q), F.col("cid") == F.col("qcid"))
             .filter(F.col("vec_id") != F.col("q_id"))
             .select("q_id", "vec_id",
-                    _l2_pair(F.col("qe"), F.col("e")).alias("d")))
+                    l2sq("qe", "e").alias("d")))
     rnk = F.row_number().over(
         W.partitionBy("q_id").orderBy(F.col("d"), F.col("vec_id")))
     return (cand.withColumn("rank", rnk)
@@ -3362,7 +3290,7 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     reranked = (shortlist.join(e, "vec_id")
                 .join(F.broadcast(qfull), F.col("q_id") == F.col("rq_id"))
                 .select("q_id", "vec_id",
-                        _l2_pair(F.col("e"), F.col("qe2")).alias("d")))
+                        l2sq("e", "qe2").alias("d")))
     w2 = W.partitionBy("q_id").orderBy(F.col("d").asc(), "vec_id")
     return (reranked.withColumn("rn", F.row_number().over(w2))
             .filter(F.col("rn") <= 3)
@@ -3420,6 +3348,8 @@ def knn_regression_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
          .select(F.col("vec_id").alias("qid"),
                  F.col("embedding").alias("qv"),
                  F.col("label").alias("true_label")))
+    # 50 anchors × corpus: the Arrow kernel won 10/10 interleaved
+    # CPU pairs against the fused cosine (PERF.md).
     sim = _cos_pair(F.col("embedding"), F.col("qv"))
     scored = (e.filter((F.col("vec_id") >= 50)
                        & F.col("label").isNotNull())

@@ -1,14 +1,15 @@
-"""Round-11 Arrow-kernel bit-exactness pins.
+"""Bit-exactness pins for the vector-scoring folds and kernels.
 
-The similarity family's scoring moved from Catalyst HOF folds
-(``aggregate(zip_with(...))``, interpreted per element) to Arrow/NumPy
-kernels. The optimization contract is BIT-IDENTICAL values: the
-kernels replicate the fold's IEEE evaluation order (left-assoc from
-0.0, per-element float→double cast, NULL→NULL, NaN flow). These tests
-differentially pin each kernel against the retained JVM reference
-fold on the real sf0.001 fixtures — any future kernel edit that
-drifts a single ulp (or mishandles NULL vs NaN) fails here before the
-oracle sweep ever runs.
+Vector scoring runs as fused JVM folds (``dot``, ``cosine``,
+``l2sq`` and the plane codes, ``aggregate(zip_with(...))``), plus one
+Arrow/NumPy kernel, ``_cos_pair``, kept where it wins, and Lloyd's
+argmin kernel. The contract is BIT-IDENTICAL values: every form folds
+left-assoc from 0.0 with a per-element float→double cast, NULL input
+scores NULL, and a zero vector's cosine is NaN, never an ANSI error.
+These tests pin the kernels against the folds, and the folds against
+NumPy and a per-plane reference, on the real sf0.001 fixtures — an
+edit that drifts a single ulp (or mishandles NULL vs NaN) fails here
+before the oracle sweep ever runs.
 """
 
 from __future__ import annotations
@@ -31,7 +32,7 @@ def _rows(df):
 
 def test_cos_pair_kernel_matches_jvm_fold_bitwise(spark):
     from sql_database_engine_spark.operators.similarity import (
-        _as_double, _cos_pair, cosine)
+        _cos_pair, cosine)
 
     e = _emb(spark)
     q = (e.filter(F.col("vec_id") < 3)
@@ -42,8 +43,7 @@ def test_cos_pair_kernel_matches_jvm_fold_bitwise(spark):
                         _cos_pair(F.col("embedding"), F.col("qv"))
                         .alias("c"))
     ref = pairs.select("vec_id", "qid",
-                       cosine(_as_double(F.col("embedding")),
-                              _as_double(F.col("qv"))).alias("c"))
+                       cosine("embedding", "qv").alias("c"))
     # exact tuple compare: doubles must be BIT-identical (repr-exact),
     # NULLs must be NULL on both sides (not NaN)
     a = _rows(kern.select("vec_id", "qid",
@@ -55,49 +55,45 @@ def test_cos_pair_kernel_matches_jvm_fold_bitwise(spark):
     assert a == b and len(a) > 0
 
 
-def test_dot_and_l2_kernels_match_jvm_folds(spark):
+def test_dot_and_l2sq_folds_match_numpy(spark):
+    import numpy as np
+
     from sql_database_engine_spark.operators.similarity import (
-        _as_double, _dot_pair, _l2_pair, _l2d_pair, dot)
+        _seq_dot, dot, l2sq)
 
     e = _emb(spark).filter(F.col("embedding").isNotNull())
     q = (e.filter(F.col("vec_id") < 2)
          .select(F.col("vec_id").alias("qid"),
                  F.col("embedding").alias("qv")))
-    pairs = e.crossJoin(F.broadcast(q))
+    rows = e.crossJoin(F.broadcast(q)).select(
+        "vec_id", "qid", "embedding", "qv", dot("embedding", "qv").alias("d"),
+        l2sq("embedding", "qv", "double").alias("l2d")
+    ).collect()
+    assert len(rows) > 0
+    X = np.array([r["embedding"] for r in rows], dtype=np.float32)
+    Y = np.array([r["qv"] for r in rows], dtype=np.float32)
+    X, Y = X.astype(np.float64), Y.astype(np.float64)
+    want_l2d = np.zeros(len(rows))
+    for j in range(X.shape[1]):
+        want_l2d = want_l2d + (X[:, j] - Y[:, j]) * (X[:, j] - Y[:, j])
+    # repr compare: the fold and the _seq_dot order agree to the bit
+    assert [repr(r["d"]) for r in rows] == [repr(v) for v in _seq_dot(X, Y)]
+    assert [repr(r["l2d"]) for r in rows] == [repr(v) for v in want_l2d]
 
-    ref_dot = dot(_as_double(F.col("embedding")), _as_double(F.col("qv")))
-    a = _rows(pairs.select(
-        "vec_id", "qid",
-        _dot_pair(F.col("embedding"), F.col("qv")).cast("string")))
-    b = _rows(pairs.select("vec_id", "qid", ref_dot.cast("string")))
-    assert a == b and len(a) > 0
-
-    ref_l2d = F.aggregate(
-        F.zip_with(_as_double(F.col("embedding")), _as_double(F.col("qv")),
-                   lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0), lambda acc, x: acc + x)
-    a = _rows(pairs.select(
-        "vec_id", "qid",
-        _l2d_pair(F.col("embedding"), F.col("qv")).cast("string")))
-    b = _rows(pairs.select("vec_id", "qid", ref_l2d.cast("string")))
-    assert a == b
-
-    # integer micro lanes: exact int64, any order — still pin equality
+    # integer micro lanes: exact int64, any order
     micro = F.expr("transform(embedding, x -> "
                    "CAST(ROUND(CAST(x AS DOUBLE) * 1000000) AS BIGINT))")
     lanes = (e.select("vec_id", micro.alias("e"))
              .crossJoin(F.broadcast(
                  e.filter(F.col("vec_id") < 2)
                  .select(F.col("vec_id").alias("qid"),
-                         micro.alias("qe")))))
-    ref_l2i = F.aggregate(
-        F.zip_with(F.col("e"), F.col("qe"),
-                   lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("long"), lambda acc, x: acc + x)
-    a = _rows(lanes.select("vec_id", "qid",
-                           _l2_pair(F.col("e"), F.col("qe"))))
-    b = _rows(lanes.select("vec_id", "qid", ref_l2i))
-    assert a == b and len(a) > 0
+                         micro.alias("qe"))))
+             .select("e", "qe", l2sq("e", "qe").alias("d"))
+             .collect())
+    A = np.array([r["e"] for r in lanes], dtype=np.int64)
+    B = np.array([r["qe"] for r in lanes], dtype=np.int64)
+    assert [r["d"] for r in lanes] == ((A - B) * (A - B)).sum(axis=1).tolist()
+    assert len(lanes) > 0
 
 
 def test_plane_code_kernels_match_jvm_fold(spark):
@@ -120,7 +116,7 @@ def test_plane_code_kernels_match_jvm_fold(spark):
     e = _emb(spark).filter(F.col("embedding").isNotNull())
     for kernel, planes in ((_neardup_code, _NEARDUP_PLANES),
                            (_ann_bucket_code, _ANN_PLANES)):
-        a = _rows(e.select("vec_id", kernel(F.col("embedding"))))
+        a = _rows(e.select("vec_id", kernel("embedding")))
         b = _rows(e.select("vec_id", jvm_code(F.col("embedding"), planes)))
         assert a == b and len(a) > 0
 
@@ -164,52 +160,47 @@ def test_kernels_null_element_inside_vector_matches_fold(spark):
     """ADVICE r11: a NULL *element* inside a vector reaches the kernel
     as a NaN lane (Arrow list→float conversion), where the JVM fold
     returns SQL NULL — unfixed, the kernel's NaN would rank FIRST
-    under ORDER BY DESC (and the int64 L2 kernel would cast NaN to
-    INT64_MIN garbage). Pins every pair kernel against the fold on a
-    frame that actually contains element nulls, plus cosine's 0/0 —
-    legitimately NaN from clean input — which must STAY NaN."""
+    under ORDER BY DESC. Pins ``_cos_pair`` against the fold on a
+    frame that actually contains element nulls, the folds' own NULL
+    results, and the zero vector: every cosine form (the kernel, the
+    fused ``cosine``, and the factored-norm ``dot / (n_a * n_b)`` of
+    the LSH and near-dup queries) scores it NaN instead of raising
+    ANSI DIVIDE_BY_ZERO."""
     from sql_database_engine_spark.operators.similarity import (
-        _as_double, _cos_pair, _dot_pair, _l2_pair, _l2d_pair, cosine,
-        dot)
+        _cos_pair, _cosine_normed, cosine, dot, l2sq)
 
     rows = [
         (0, [1.0, 2.0, 3.0], [4.0, 5.0, 6.0]),      # clean
         (1, [1.0, None, 3.0], [4.0, 5.0, 6.0]),     # element null left
         (2, [1.0, 2.0, 3.0], [4.0, 5.0, None]),     # element null right
         (3, None, [4.0, 5.0, 6.0]),                 # whole-vector null
-        (4, [0.0, 0.0, 0.0], [0.0, 0.0, 0.0]),      # cosine 0/0 -> NaN
+        (4, [0.0, 0.0, 0.0], [0.0, 0.0, 0.0]),      # zero vector
     ]
     df = spark.createDataFrame(
         rows, "id long, a array<float>, b array<float>")
-    a, b = F.col("a"), F.col("b")
-    ad, bd = _as_double(a), _as_double(b)
-    ref_l2d = F.aggregate(F.zip_with(ad, bd, lambda x, y: (x - y) * (x - y)),
-                          F.lit(0.0), lambda acc, x: acc + x)
-    # ANSI mode makes the JVM fold THROW on the 0/0 row (double
-    # division by zero), so the fold reference only covers rows 0-3;
-    # the kernel's 0/0 row is asserted NaN separately below.
-    out = df.filter(F.col("id") < 4).select(
-        "id",
-        _dot_pair(a, b).alias("kd"), dot(ad, bd).alias("rd"),
-        _cos_pair(a, b).alias("kc"), cosine(ad, bd).alias("rc"),
-        _l2d_pair(a, b).alias("kl"), ref_l2d.alias("rl")).collect()
-    for r in out:
-        for k, ref in (("kd", "rd"), ("kc", "rc"), ("kl", "rl")):
-            assert repr(r[k]) == repr(r[ref]), (r["id"], k, r[k], r[ref])
-    got = {r["id"]: r["kc"] for r in out}
-    assert got[1] is None and got[2] is None and got[3] is None
-    z = (df.filter(F.col("id") == 4)
-         .select(_cos_pair(a, b).alias("kc")).collect()[0]["kc"])
-    assert z != z  # NaN preserved for clean 0/0 input
+    normed = df.select("*", F.sqrt(dot("a", "a")).alias("na"),
+                       F.sqrt(dot("b", "b")).alias("nb"))
+    out = {r["id"]: r for r in normed.select(
+        "id", _cos_pair(F.col("a"), F.col("b")).alias("kc"),
+        cosine("a", "b").alias("rc"),
+        _cosine_normed("a", "b", "na", "nb").alias("fc"),
+        dot("a", "b").alias("d"), l2sq("a", "b", "double").alias("l2")
+    ).collect()}
+    for i in range(4):
+        r = out[i]
+        assert repr(r["kc"]) == repr(r["rc"]) == repr(r["fc"]), r
+    assert out[0]["rc"] == 32.0 / (14.0 ** 0.5 * 77.0 ** 0.5)
+    assert (out[0]["d"], out[0]["l2"]) == (32.0, 27.0)
+    for i in (1, 2, 3):
+        assert out[i]["kc"] is None, out[i]
+        assert out[i]["d"] is None and out[i]["l2"] is None, out[i]
+    z = out[4]
+    assert all(z[k] != z[k] for k in ("kc", "rc", "fc")), z  # all NaN
+    assert (z["d"], z["l2"]) == (0.0, 0.0)
 
     idf = spark.createDataFrame(
         [(0, [1, 2], [3, 4]), (1, [1, None], [3, 4]), (2, None, [3, 4])],
         "id long, a array<bigint>, b array<bigint>")
-    ref_l2 = F.aggregate(
-        F.zip_with(F.col("a"), F.col("b"), lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("long"), lambda acc, x: acc + x)
-    io = idf.select("id", _l2_pair(F.col("a"), F.col("b")).alias("k"),
-                    ref_l2.alias("r")).collect()
-    for r in io:
-        assert r["k"] == r["r"], (r["id"], r["k"], r["r"])
-    assert io[0]["k"] == 8 and io[1]["k"] is None and io[2]["k"] is None
+    io = {r["id"]: r["k"] for r in idf.select(
+        "id", l2sq("a", "b").alias("k")).collect()}
+    assert io == {0: 8, 1: None, 2: None}

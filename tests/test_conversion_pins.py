@@ -48,6 +48,23 @@ def test_plane_literals_roundtrip_bitexact():
             assert list(got) == [float(x) for x in p]
 
 
+def test_planes_json_literal_roundtrip_bitexact(spark):
+    """The Spark side of the same trap: the fused plane-code folds
+    take each plane set as ONE ``from_json`` literal, and every
+    coefficient must parse back to the identical IEEE-754 double, or a
+    near-zero projection could flip a sign bit against the DuckDB
+    twin's ``_dlit`` literals."""
+    from pyspark.sql import functions as F
+    from sql_database_engine_spark.operators.similarity import (
+        _ANN_PLANES, _NEARDUP_PLANES, _planes_literal)
+
+    for planes in (_ANN_PLANES, _NEARDUP_PLANES):
+        got = spark.range(1).select(
+            F.expr(_planes_literal(planes)).alias("p")).collect()[0]["p"]
+        assert [list(r) for r in got] == [[float(x) for x in p]
+                                          for p in planes]
+
+
 def test_ann_bucket_codes_agree_cross_engine(spark):
     """Spark `_ann_bucket_code` and DuckDB `_ann_bucket_sql` assign
     every corpus vector the same 8-bit bucket."""
@@ -61,9 +78,7 @@ def test_ann_bucket_codes_agree_cross_engine(spark):
         r["vec_id"]: r["b"]
         for r in emb.select(
             "vec_id",
-            _ann_bucket_code(
-                F.transform("embedding", lambda x: x.cast("double"))
-            ).alias("b")).collect()
+            _ann_bucket_code("embedding").alias("b")).collect()
     }
     con = duckdb.connect()
     con.sql(f"CREATE VIEW embeddings AS "

@@ -57,16 +57,16 @@ def test_lsh_in_bucket_results_are_true_neighbors(spark):
     assert lsh, "LSH produced no candidates"
     # LSH-reported cosine must equal the exact cosine (it scores
     # candidates exactly); check against an independent computation.
-    from sql_database_engine_spark.operators.similarity import dot, _as_double
+    from sql_database_engine_spark.operators.similarity import dot
     from sql_database_engine_spark.catalog import Catalog
     e = Catalog(spark, SF_SMOKE).embeddings
-    base = (e.select("vec_id", _as_double(F.col("embedding")).alias("v"))
-            .withColumn("norm", F.sqrt(dot(F.col("v"), F.col("v")))))
+    base = (e.select("vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v"))
+            .withColumn("norm", F.sqrt(dot("v", "v"))))
     qids = {q for q, _ in lsh}
     pairs = (base.alias("a").crossJoin(base.alias("b"))
              .filter(F.col("a.vec_id").isin(*qids))
              .select(F.col("a.vec_id").alias("q_id"), F.col("b.vec_id").alias("vec_id"),
-                     F.round(dot(F.col("a.v"), F.col("b.v"))
+                     F.round(dot("a.v", "b.v")
                              / (F.col("a.norm") * F.col("b.norm")), 6).alias("sim")))
     truth = {(r.q_id, r.vec_id): r.sim for r in pairs.collect()}
     for k, sim in lsh.items():
@@ -103,20 +103,20 @@ def test_multiprobe_recall_dominates_single_probe(spark):
     probe for every query, and strictly improve recall@3 overall
     against the exact brute-force ranking."""
     qs = _queries()
-    from sql_database_engine_spark.operators.similarity import dot, _as_double
+    from sql_database_engine_spark.operators.similarity import dot
     from sql_database_engine_spark.catalog import Catalog
     from pyspark.sql import Window as W
 
     e = Catalog(spark, SF_SMOKE).embeddings
-    base = (e.select("vec_id", _as_double(F.col("embedding")).alias("v"))
-            .withColumn("norm", F.sqrt(dot(F.col("v"), F.col("v")))))
+    base = (e.select("vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v"))
+            .withColumn("norm", F.sqrt(dot("v", "v"))))
     q = base.filter(F.col("vec_id") < 20).select(
         F.col("vec_id").alias("q_id"), F.col("v").alias("qv"),
         F.col("norm").alias("qnorm"))
     exact = (q.crossJoin(base)
              .filter(F.col("vec_id") != F.col("q_id"))
              .select("q_id", "vec_id",
-                     F.round(dot(F.col("qv"), F.col("v"))
+                     F.round(dot("qv", "v")
                              / (F.col("qnorm") * F.col("norm")), 6).alias("s")))
     w = W.partitionBy("q_id").orderBy(F.col("s").desc(), "vec_id")
     truth = (exact.withColumn("rn", F.row_number().over(w))

@@ -188,6 +188,19 @@ def test_connected_components_pointer_jumping_rounds(spark):
     assert len(rows) == 64 and all(r.cluster_id == 0 for r in rows)
 
 
+@pytest.mark.parametrize("name", [
+    "embedding_neardup_pairs", "embedding_norms_per_label", "ann_lsh_topk",
+    "ann_lsh_multiprobe_topk", "filtered_vector_search",
+    "mmr_diversified_topk", "hard_negative_mining", "knn_join_bruteforce",
+    "knn_label_eval", "vector_range_search", "matryoshka_prefix_recall",
+    "ndcg_at_10_eval", "ann_ivf_staged_topk", "ann_ivf_staged_append_probe"])
+def test_fused_vector_scoring_runs_no_python(spark, name):
+    """These queries score vectors with the fused JVM folds (PERF.md
+    "One fused vector-scoring path"): no row crosses to a Python
+    worker, so no Arrow evaluation node appears in the plan."""
+    assert "EvalPython" not in _plan(spark, name)
+
+
 def test_chunking_explodes_without_shuffle(spark):
     """Context-window chunking is a per-row expansion: the plan must
     contain NO Exchange — at 100 TB the chunk pass is scan-speed."""

@@ -294,9 +294,7 @@ def main() -> int:
         def probe_candidates(sf_dir: str) -> int:
             emb = load_table(spark, sf_dir, "embeddings")
             coded = emb.select(
-                "vec_id", _ann_bucket_code(
-                    SF.transform("embedding",
-                                 lambda x: x.cast("double"))).alias("b"))
+                "vec_id", _ann_bucket_code("embedding").alias("b"))
             occ = coded.groupBy("b").agg(SF.count(SF.lit(1)).alias("n"))
             q = coded.filter(SF.col("vec_id") < 20)
             return (q.join(occ, "b")
