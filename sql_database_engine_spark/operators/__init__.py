@@ -150,7 +150,9 @@ def _driver_checked() -> set[str]:
     drifted = {n for n in seen
                if n in QUERIES and n in stamps
                and stamps[n] != query_fingerprint(n)}
-    rewritten_since_sampled: set[str] = set()
+    # neardup_cluster_assignment reads embedding_neardup_pairs,
+    # rewritten as a one-shuffle bucket pairing.
+    rewritten_since_sampled: set[str] = {"neardup_cluster_assignment"}
     return seen - drifted - rewritten_since_sampled
 
 

@@ -16,8 +16,10 @@ Scale story:
 - brute-force top-k vs ONE query vector is a broadcast of 64 floats +
   a map-side TopK (TakeOrderedAndProject): no shuffle of the corpus,
   perfectly scalable.
-- all-pairs near-dup restricts to a bucketing key (label) so the join
-  is bucket-quadratic, never corpus-quadratic.
+- all-pairs near-dup groups the vectors into banded-LSH buckets, a key
+  independent of any data column, in one shuffle and pairs them
+  inside each bucket: work is quadratic in bucket fill, never in the
+  corpus.
 - the LSH variant buckets by random-hyperplane sign bits: candidate
   generation becomes an equi-join on the bucket key — the 100 TB
   path; its recall/precision is probabilistic, so it's a rows-only
@@ -87,7 +89,10 @@ def cosine(a: str, b: str) -> Column:
 
 def _cosine_normed(a: str, b: str, na: str, nb: str) -> Column:
     """:func:`cosine` over precomputed norms ``na`` and ``nb``
-    (``sqrt(dot(a, a))``): dot(a,b) / (na * nb), NaN where it is 0/0."""
+    (``sqrt(dot(a, a))``): dot(a,b) / (na * nb), NaN where it is 0/0.
+    Callers: ``ann_lsh_multiprobe_topk`` and ``hard_negative_mining``.
+    ``embedding_neardup_pairs`` builds the same text from the same two
+    helpers inside its pairing lambda."""
     return F.expr(_nan_div_sql(_dot_sql(a, b), f"{na} * {nb}"))
 
 
@@ -383,49 +388,62 @@ def _neardup_pairs_sql() -> str:
 def embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-duplicate pairs via banded hyperplane LSH.
 
-    Candidate generation is an equi-join on (band, band_code) — a
-    high-cardinality key independent of any data column, so per-bucket
-    work stays sub-quadratic as the corpus grows (the round-1 version
-    keyed on `label`, whose fixed cardinality made buckets quadratic
-    in corpus size). Candidate id-pairs are deduped BEFORE the
-    vectors are re-joined for exact-cosine verification, so each
-    surviving pair folds one dot product once. The DuckDB oracle
-    computes the identical code/bands/verify, so the match is exact,
-    not probabilistic.
+    One scan, one shuffle, no join. Each vector's ``(vec_id, v, norm,
+    code)`` struct is built once, exploded into its 4 band rows and
+    grouped on ``(band, bcode)``, a key independent of any data column
+    (a fixed-cardinality key such as `label` would make every bucket
+    grow with the corpus). Each bucket list is exploded
+    once; every row is paired with its bucket-mates of larger
+    ``vec_id`` by a ``filter``/``transform`` over the list, so no array
+    ever holds a whole bucket's pairs. A pair is kept only in the
+    lowest band where the two codes agree, so it is unique without a
+    ``distinct``, and its rounded cosine is computed in the
+    generator's struct: one fold per candidate.
+
+    Each vector crosses the shuffle once per band, so the traced
+    ``llm-pipeline`` pass writes 572 KB of shuffle where the join plan
+    wrote 72 KB. At scale this replaces a sort-merge re-join that would
+    carry one vector per candidate: at sf0.01, 8,191 bucket matches
+    against 2,000 band rows. Work per bucket stays quadratic in how
+    full the bucket is.
+
+    A zero vector's cosine is NaN here and -1.0 in DuckDB; its pairs
+    are dropped, as the oracle's threshold drops them. The DuckDB
+    oracle computes the identical code/bands/verify, so the match is
+    exact, not probabilistic.
     """
     e = Catalog(spark, sf_dir).embeddings.filter(
         F.col("embedding").isNotNull())
-    base = (e.select("vec_id", F.col("embedding").alias("v"))
-            .withColumn("norm", F.sqrt(dot("v", "v")))
-            .withColumn("code", _neardup_code("v")))
-    bands = base.select(
-        "vec_id",
-        F.explode(F.array(*[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.shiftright(F.col("code"), b * _NEARDUP_BAND_BITS)
-                .bitwiseAND(F.lit(_NEARDUP_BAND_MASK)).alias("bcode"))
-            for b in range(_NEARDUP_BANDS)])).alias("bb"),
-    ).select("vec_id", "bb.band", "bb.bcode")
-    x, y = bands.alias("x"), bands.alias("y")
-    cand = (
-        x.join(y, (F.col("x.band") == F.col("y.band"))
-               & (F.col("x.bcode") == F.col("y.bcode"))
-               & (F.col("x.vec_id") < F.col("y.vec_id")))
-        .select(F.col("x.vec_id").alias("vec_a"),
-                F.col("y.vec_id").alias("vec_b"))
-        .distinct()  # id-only dedup before the vectors come back
-    )
-    va = base.select(F.col("vec_id").alias("vec_a"),
-                     F.col("v").alias("v_a"), F.col("norm").alias("n_a"))
-    vb = base.select(F.col("vec_id").alias("vec_b"),
-                     F.col("v").alias("v_b"), F.col("norm").alias("n_b"))
-    sim = _cosine_normed("v_a", "v_b", "n_a", "n_b")
+    vec = e.select(F.struct(
+        "vec_id", F.col("embedding").alias("v"),
+        F.sqrt(dot("embedding", "embedding")).alias("norm"),
+        _neardup_code("embedding").alias("code")).alias("r"))
+    bcode = F.expr(f"(r.code >> (band * {_NEARDUP_BAND_BITS}))"
+                   f" & {_NEARDUP_BAND_MASK}")
+    buckets = (
+        vec.select("r", F.expr(f"explode(sequence(0, {_NEARDUP_BANDS - 1}))")
+                   .alias("band"))
+        .select("r", "band", bcode.alias("bcode"))
+        .groupBy("band", "bcode").agg(F.collect_list("r").alias("rs")))
+    # The lowest band where the two codes agree; a pair is kept only
+    # in that band's bucket, so it is emitted (and scored) once.
+    xor = "(r.code ^ m.code)"
+    first_band = ("CASE " + " ".join(
+        f"WHEN (({xor} >> {b * _NEARDUP_BAND_BITS}) & {_NEARDUP_BAND_MASK})"
+        f" = 0 THEN {b}" for b in range(_NEARDUP_BANDS - 1))
+        + f" ELSE {_NEARDUP_BANDS - 1} END")
+    score = _nan_div_sql(_dot_sql("r.v", "m.v"), "r.norm * m.norm")
+    mates = F.expr(
+        f"transform(filter(rs, m -> m.vec_id > r.vec_id AND {first_band} = band), "
+        f"m -> named_struct('vec_b', m.vec_id, 'cos_sim', round({score}, 6)))")
     return (
-        cand.join(va, "vec_a").join(vb, "vec_b")
-        .withColumn("cos_sim", F.round(sim, 6))
-        .filter(F.col("cos_sim") >= 0.25)
-        .select("vec_a", "vec_b", "cos_sim")
+        buckets.select("band", "rs", F.explode("rs").alias("r"))
+        .select(F.col("r.vec_id").alias("vec_a"),
+                F.explode(mates).alias("pair"))
+        .select("vec_a", "pair.vec_b", "pair.cos_sim")
+        # Spark orders NaN above every number; a zero vector's NaN
+        # score is not a near-duplicate (DuckDB scores it -1.0).
+        .filter((F.col("cos_sim") >= 0.25) & ~F.isnan("cos_sim"))
     )
 
 

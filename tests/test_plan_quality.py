@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import pytest
 
-from .conftest import SF_SMOKE
+from .conftest import SF_SMOKE, jobs_started
 
 
 def _plan(spark, name):
@@ -158,16 +158,40 @@ def test_dynamic_partition_pruning_on_partitioned_fact(spark, tmp_path):
     assert j.count() > 0
 
 
-def test_neardup_pairs_join_on_band_code_not_label(spark):
-    """The all-pairs near-dup candidate join must key on the banded
+def test_neardup_pairs_group_on_band_code_not_label(spark):
+    """The all-pairs near-dup candidates must be keyed on the banded
     LSH code — a key whose cardinality is independent of any data
     column — not on `label` (fixed cardinality → per-bucket work grows
     quadratically with the corpus; the round-1 scale-killer)."""
     plan = _plan(spark, "embedding_neardup_pairs")
-    joins = [l for l in plan.splitlines()
-             if "Join" in l and "lambda" not in l.split("Join")[0]]
-    assert any("bcode" in l and "band" in l for l in joins), joins
-    assert not any("label" in l.split(", (")[0] for l in joins), joins
+    keys = [l.split("keys=[")[1].split("]")[0] for l in plan.splitlines()
+            if "Aggregate(keys=[" in l]
+    assert keys and all(k.startswith("band#") and ", bcode#" in k
+                        and k.count("#") == 2 for k in keys), keys
+    assert not any("label" in k for k in keys), keys
+
+
+def test_neardup_pairs_one_scan_one_shuffle_no_join(spark):
+    """Candidates and verify run in one pass: the embeddings are
+    scanned once and shuffled once (grouped into their LSH buckets),
+    with no join and no broadcast."""
+    plan = _plan(spark, "embedding_neardup_pairs")
+    assert plan.count("FileScan parquet") == 1
+    assert "embeddings.parquet" in plan
+    assert sum("Exchange" in l for l in plan.splitlines()) == 1, plan
+    assert "Join" not in plan and "BroadcastExchange" not in plan
+
+
+def test_neardup_pairs_drain_starts_at_most_two_jobs(spark):
+    """A noop drain runs the shuffle map stage and the result stage:
+    at most 2 jobs (the join plan started 4)."""
+    from sql_database_engine_spark import operators
+    operators.load_all()
+    df = operators.QUERIES["embedding_neardup_pairs"](spark, SF_SMOKE)
+    _, jobs = jobs_started(
+        spark, "neardup-drain",
+        lambda: df.write.format("noop").mode("overwrite").save())
+    assert jobs <= 2
 
 
 def test_connected_components_pointer_jumping_rounds(spark):

@@ -34,7 +34,6 @@ ALLOWED = {
     ("ann_lsh_topk", "embeddings"),
     ("ann_lsh_multiprobe_topk", "embeddings"),
     ("ann_recall_contract", "embeddings"),
-    ("embedding_neardup_pairs", "embeddings"),
     ("centroid_cosine_matrix", "embeddings"),
     ("minhash_quality_eval", "documents"),
     ("minhash_lsh_neardup", "documents"),
