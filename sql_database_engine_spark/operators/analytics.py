@@ -1057,10 +1057,11 @@ def basket_brand_pair_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     is bounded by the brand count in that order's basket (≤7 lines per
     order ⇒ ≤21 pairs), never by raw line count. Both self-join sides
     shuffle on the same l_orderkey partitioning, which AQE plans as
-    one exchange reused twice; the brand marginals and order total are
-    single-row / 25-row broadcasts onto the pair aggregate. The part
-    dimension rides in as a broadcast hash join (partkey → brand is
-    the only projected column). At a 1000× order count nothing in the
+    one exchange reused twice; the brand names and marginals (one row
+    holding a 25-entry map) and the order total are single-row
+    broadcasts onto the pair aggregate. The part dimension rides in as
+    a broadcast hash join (partkey → brand is the only projected
+    column). At a 1000× order count nothing in the
     plan grows except the two orderkey-partitioned passes — the pair
     space stays |brands|² bounded.
     """
@@ -1073,29 +1074,28 @@ def basket_brand_pair_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     # int-id array instead of the former corpus self-join (guide §2.4;
     # same derivation as the graph family's _pair_counts). bid order ==
     # brand string order, so sid < did is the same pair set.
-    dim = _brand_dim(cat)
     sets = _basket_sets(cat).localCheckpoint(eager=False)
     n_orders = (cat.lineitem.agg(
         F.countDistinct("l_orderkey").alias("t")))
-    brand_n = (sets.select(F.explode("bs").alias("bid"))
-               .groupBy("bid").agg(F.count(F.lit(1)).alias("n")))
     ex = (sets.select(F.explode("bs").alias("sid"), "bs")
           .select("sid", F.explode("bs").alias("did"))
           .filter(F.col("sid") < F.col("did")))
     cnt = (ex.groupBy("sid", "did")
            .agg(F.count(F.lit(1)).alias("n_pair")))
-    pa = F.broadcast(dim.select(F.col("bid").alias("sid"),
-                                F.col("p_brand").alias("brand_a")))
-    pb = F.broadcast(dim.select(F.col("bid").alias("did"),
-                                F.col("p_brand").alias("brand_b")))
-    pairs = (cnt.join(pa, "sid").join(pb, "did")
-             .select("brand_a", "brand_b", "n_pair"))
-    bn = brand_n.join(F.broadcast(dim), "bid").select("p_brand", "n")
-    na = F.broadcast(bn.select(F.col("p_brand").alias("brand_a"),
-                               F.col("n").alias("n_a")))
-    nb = F.broadcast(bn.select(F.col("p_brand").alias("brand_b"),
-                               F.col("n").alias("n_b")))
-    return (pairs.join(na, "brand_a").join(nb, "brand_b")
+    # Names and marginals in ONE broadcast row, b: map<bid,
+    # struct<p_brand, n>>. Both pair sides look it up, so the plan
+    # derives the brand dictionary (a ``part`` scan) once; a dictionary
+    # join per side re-derived it at every reference.
+    b = F.broadcast(
+        sets.select(F.explode("bs").alias("bid"))
+        .groupBy("bid").agg(F.count(F.lit(1)).alias("n"))
+        .join(F.broadcast(_brand_dim(cat)), "bid")
+        .agg(F.map_from_entries(F.collect_list(F.struct(
+            "bid", F.struct("p_brand", "n")))).alias("b")))
+    return (cnt.crossJoin(b)
+            .selectExpr("b[sid].p_brand AS brand_a",
+                        "b[did].p_brand AS brand_b", "n_pair",
+                        "b[sid].n AS n_a", "b[did].n AS n_b")
             .crossJoin(F.broadcast(n_orders))
             .select("brand_a", "brand_b", "n_pair", "n_a", "n_b",
                     (F.col("n_pair").cast("double") * F.col("t")

@@ -34,10 +34,12 @@ from typing import Iterator, Tuple
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import (Column, DataFrame, SparkSession,
                          Window as W, functions as F)
-from pyspark.sql.types import DoubleType, LongType
+from pyspark.sql.types import (DoubleType, LongType, StructField,
+                               StructType)
 
 from ..catalog import Catalog
 from . import query
@@ -289,6 +291,11 @@ def cosine_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     The baseline ANN oracle: broadcast the query vector, score every
     row map-side, TakeOrderedAndProject keeps 10 per partition then
     10 global — no shuffle of the embedding corpus at any scale.
+
+    A zero vector's cosine is NaN here and -1.0 in DuckDB, where it
+    ranks last; Spark orders NaN above every number, so NaN scores are
+    dropped before the ranking, as ``embedding_neardup_pairs`` drops
+    them before its threshold.
     """
     e = Catalog(spark, sf_dir).embeddings
     q = (e.filter(F.col("vec_id") == 0)
@@ -298,6 +305,7 @@ def cosine_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.filter(F.col("vec_id") != 0)
         .crossJoin(F.broadcast(q))
         .select("vec_id", "label", F.round(sim, 6).alias("cos_sim"))
+        .filter(~F.isnan("cos_sim"))
         .orderBy(F.col("cos_sim").desc(), "vec_id")
         .limit(10)
     )
@@ -1800,6 +1808,59 @@ def _pca_next_iterate(rows) -> list:
     return [None if w is None else _half_up(w * 1000000.0 / m) for w in ws]
 
 
+def _pca_tail(rows, n: int) -> list:
+    """``pca_power_iteration``'s result rows ``(dim, loading_micros,
+    eig_est_micros)``, ordered by ``dim``, from round three's
+    ``(i, w)`` rows and the corpus size ``n``, computed as Spark
+    computes them: v is :func:`_pca_next_iterate`'s normalization; the
+    sign is that of the v with the largest ``|v| * 1000 + (1000 - i)``
+    (so the smaller ``i`` wins a ``|v|`` tie), and -1 when every v is
+    NULL, as ``max_by(...) >= 0`` is then NULL; and eig_est_micros =
+    round(max|w| / n), NULL when every w is NULL."""
+    rows = sorted(rows, key=lambda r: r[0])
+    v = _pca_next_iterate(rows)
+    m = max((abs(w) for _, w in rows if w is not None), default=None)
+    top = max(((abs(x) * 1000 + (1000 - i), x)
+               for (i, _), x in zip(rows, v) if x is not None),
+              default=(None, None))[1]
+    s = 1 if top is not None and top >= 0 else -1
+    eig = None if m is None else _half_up(m / n)
+    return [(i, None if x is None else x * s, eig)
+            for (i, _), x in zip(rows, v)]
+
+
+def _pca_w_pass(e: DataFrame, v: list) -> DataFrame:
+    """One corpus pass of ``pca_power_iteration`` against the iterate
+    ``v``: the 64-key aggregate ``(i, w, n)`` with
+    w[i] = Σ_vec em[i] * floor(em·v / 1e6) and n[i] the rows at key i.
+    ``posexplode_outer`` gives each vector exactly one ``i = 1`` row,
+    or one ``i IS NULL`` row when its embedding is NULL or empty, so
+    n at ``i = 1`` plus n at NULL ``i`` is the corpus size."""
+    v_arr = "CAST(array({}) AS ARRAY<BIGINT>)".format(", ".join(
+        "NULL" if x is None else f"{x}L" for x in v))
+    dot = (f"aggregate(zip_with(em, {v_arr}, (a, b) -> a * b),"
+           " 0L, (acc, x) -> acc + x)")
+    # sf gets its own projection, so it is computed once per row, not
+    # once per element inside the transform lambda below.
+    return (e.selectExpr("transform(embedding, x -> CAST(ROUND("
+                         "CAST(x AS DOUBLE) * 1000000.0D) AS BIGINT))"
+                         " AS em")
+            .selectExpr("em", f"CAST(FLOOR(CAST({dot} AS DOUBLE)"
+                              " / 1000000.0D) AS BIGINT) AS sf")
+            .selectExpr("posexplode_outer(transform(em, t -> t * sf))"
+                        " AS (p, c)")
+            .groupBy(F.expr("p + 1").alias("i"))
+            .agg(F.expr("CAST(SUM(CAST(c AS DECIMAL(38,0)))"
+                        " AS DOUBLE)").alias("w"),
+                 F.count(F.lit(1)).alias("n")))
+
+
+#: ``pca_power_iteration``'s result: ``dim`` is a vector position, never NULL
+_PCA_SCHEMA = StructType([StructField("dim", LongType(), False),
+                          StructField("loading_micros", LongType()),
+                          StructField("eig_est_micros", LongType())])
+
+
 @query(
     "pca_power_iteration",
     oracle=f"""
@@ -1847,60 +1908,35 @@ def pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     size — int64 would overflow near 1e9 vectors); normalization is
     v = round(w * 1e6 / max|w|), a fixed double divide and round.
 
-    Feedback: rounds one and two collect the 64-key aggregate alone
-    (64 ``(i, w)`` rows, one shuffle) and L∞-normalize on the driver
-    (:func:`_pca_next_iterate`). The driver's division is the same
-    IEEE double operation Spark runs, and its HALF_UP rounding of the
-    exact binary value equals Spark's ``round`` (HALF_UP of the
-    double's shortest decimal string): a ``.5`` tie below 2^52 is
-    itself a double, so no double other than the tie can print as it
-    or on its far side. Each round's iterate enters the next pass as
-    ONE parsed literal, ``CAST(array(v1L, …) AS ARRAY<BIGINT>)``.
-    Round three composes lazily into the returned plan and normalizes
-    Spark-side. Sign is canonicalized by the dominant-|loading|
-    component and eig_est_micros = max|w| / n is the Rayleigh-style
+    Feedback: each of the three rounds collects its 64-key aggregate
+    alone (:func:`_pca_w_pass`: 64 ``(i, w)`` rows, one shuffle) and
+    L∞-normalizes on the driver (:func:`_pca_next_iterate`). The
+    driver's division is the same IEEE double operation Spark runs,
+    and its HALF_UP rounding of the exact binary value equals Spark's
+    ``round`` (HALF_UP of the double's shortest decimal string): a
+    ``.5`` tie below 2^52 is itself a double, so no double other than
+    the tie can print as it or on its far side. Each round's iterate
+    enters the next pass as ONE parsed literal,
+    ``CAST(array(v1L, …) AS ARRAY<BIGINT>)``. The corpus size n rides
+    in the same aggregate as a per-key row count, so no pass scans
+    the corpus for it. The 64-row tail runs on the driver too
+    (:func:`_pca_tail`) and the result is a local relation built from
+    Arrow: sign is canonicalized by the dominant-|loading| component
+    and eig_est_micros = max|w| / n is the Rayleigh-style
     eigenvalue estimate the iteration exposes for free."""
     e = Catalog(spark, sf_dir).embeddings
-
-    def w_pass(v: list) -> DataFrame:
-        """One corpus pass: w[i] = Σ_vec em[i] * floor(em·v / 1e6)."""
-        v_arr = "CAST(array({}) AS ARRAY<BIGINT>)".format(", ".join(
-            "NULL" if x is None else f"{x}L" for x in v))
-        dot = (f"aggregate(zip_with(em, {v_arr}, (a, b) -> a * b),"
-               " 0L, (acc, x) -> acc + x)")
-        # sf gets its own projection, so it is computed once per row,
-        # not once per element inside the transform lambda below.
-        return (e.selectExpr("transform(embedding, x -> CAST(ROUND("
-                             "CAST(x AS DOUBLE) * 1000000.0D) AS BIGINT))"
-                             " AS em")
-                .selectExpr("em", f"CAST(FLOOR(CAST({dot} AS DOUBLE)"
-                                  " / 1000000.0D) AS BIGINT) AS sf")
-                .selectExpr("posexplode(transform(em, t -> t * sf))"
-                            " AS (p, c)")
-                .groupBy(F.expr("p + 1").alias("i"))
-                .agg(F.expr("CAST(SUM(CAST(c AS DECIMAL(38,0)))"
-                            " AS DOUBLE)").alias("w")))
-
     v = [1000000] * 64
-    for _ in range(2):  # rounds 1-2: driver-fed 64-key feedback
-        v = _pca_next_iterate(w_pass(v).collect())
-    w = w_pass(v).localCheckpoint(eager=False)  # round 3: lazy
-    m = w.agg(F.max(F.abs(F.col("w"))).alias("m"))
-    v3 = (w.crossJoin(F.broadcast(m))
-          .select("i", F.round(F.col("w") * 1000000.0 / F.col("m"))
-                  .cast("bigint").alias("v")))
-    sgn = v3.agg(
-        F.when(F.expr("max_by(v, abs(v) * 1000 + (1000 - i))") >= 0, 1)
-        .otherwise(-1).alias("s"))
-    n_row = e.agg(F.count(F.lit(1)).cast("double").alias("n"))
-    eig = (m.crossJoin(F.broadcast(n_row))
-           .select(F.round(F.col("m") / F.col("n")).cast("bigint")
-                   .alias("eig_est_micros")))
-    return (v3.crossJoin(F.broadcast(sgn)).crossJoin(F.broadcast(eig))
-            .select(F.col("i").cast("bigint").alias("dim"),
-                    (F.col("v") * F.col("s")).cast("bigint")
-                    .alias("loading_micros"),
-                    "eig_est_micros"))
+    for k in range(3):  # each round collects its 64-key aggregate alone
+        rows = _pca_w_pass(e, v).collect()
+        w = [(r.i, r.w) for r in rows if r.i is not None]
+        if k < 2:
+            v = _pca_next_iterate(w)
+    n = sum(r.n for r in rows if r.i in (None, 1))
+    cols = list(zip(*_pca_tail(w, n))) or [()] * len(_PCA_SCHEMA)
+    return spark.createDataFrame(
+        pa.Table.from_arrays([pa.array(c, type=pa.int64()) for c in cols],
+                             names=_PCA_SCHEMA.names),
+        schema=_PCA_SCHEMA)
 
 
 @query(

@@ -643,10 +643,16 @@ def test_importance_weights_broadcast_rate_table(spark):
 
 
 def test_pca_matrix_free_no_joins_no_python(spark):
-    plan = _plan(spark, "pca_power_iteration")
-    # Matrix-free: the returned round-3 plan is a corpus map-pass
-    # (HOF dot product against literal iterate) + 64-key aggregate —
-    # no corpus join, no d^2 explode, no Python.
+    # The query returns a local relation, so plan one round's pass.
+    from sql_database_engine_spark.catalog import Catalog
+    from sql_database_engine_spark.operators.similarity import _pca_w_pass
+    e = Catalog(spark, SF_SMOKE).embeddings
+    plan = (_pca_w_pass(e, [1000000] * 64)._jdf.queryExecution()
+            .executedPlan().toString())
+    # Matrix-free: a round is a corpus map-pass (HOF dot product
+    # against the literal iterate) + 64-key aggregate — no corpus
+    # join, no d^2 explode, no Python.
+    assert "HashAggregate" in plan and "FileScan parquet" in plan
     assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan
     assert "CartesianProduct" not in plan
     assert "PythonUDF" not in plan

@@ -3,8 +3,10 @@
 The shipped fixtures hold no zero vector, so no sweep kind reaches the
 case where the cosine's denominator is 0: Spark scores it NaN (IEEE
 0/0) and DuckDB's ``list_cosine_similarity`` scores it -1.0. Spark
-orders NaN above every number, so ``NaN >= threshold`` is true; an
-operator that thresholds on the score must drop NaN to agree.
+orders NaN above every number, so ``NaN >= threshold`` is true and a
+NaN tops a descending ranking; an operator that thresholds or ranks on
+the score must drop NaN to agree. ``cosine_topk_bruteforce`` is the
+ranking site; the two neardup queries are the threshold sites.
 """
 
 from __future__ import annotations
@@ -37,7 +39,8 @@ def _zeroed_replica(tmp_path) -> str:
 
 
 @pytest.mark.parametrize(
-    "name", ["embedding_neardup_pairs", "neardup_cluster_assignment"])
+    "name", ["cosine_topk_bruteforce", "embedding_neardup_pairs",
+             "neardup_cluster_assignment"])
 def test_neardup_drops_zero_vector_like_twin(spark, tmp_path, name):
     import duckdb
 

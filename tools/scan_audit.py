@@ -10,6 +10,9 @@ is a lazy localCheckpoint on the reused relation.
 
 Usage: python tools/scan_audit.py [--threshold 3]
 
+``tests/test_scan_audit.py`` runs the same :func:`audit`, so a scan
+regression fails the test suite.
+
 Exit 0 when nothing exceeds the threshold outside the documented
 allowlist (multi-stage index builds whose scans are distinct
 algorithmic passes — see PERF.md "Round-4 scan-count audit").
@@ -58,35 +61,52 @@ ALLOWED = {
 }
 
 
+#: flag same-table scan counts above this
+THRESHOLD = 3
+
+
+def audit(spark, sf: str, threshold: int = THRESHOLD):
+    """Plan every registered query over ``sf``. Returns the
+    ``(query, table, scans)`` triples above ``threshold`` outside
+    :data:`ALLOWED`, and the ``(query, error)`` pairs that could not
+    be planned."""
+    from sql_database_engine_spark import operators as ops
+
+    ops.load_all()
+    tag = re.escape(os.path.basename(sf.rstrip("/")))
+    offenders, skipped = [], []
+    for name, fn in ops.QUERIES.items():
+        try:
+            df = fn(spark, sf)
+            plan = df._jdf.queryExecution().executedPlan().toString()
+        except Exception as e:  # staging/streaming machinery quirks
+            skipped.append((name, str(e)[:60]))
+            continue
+        tables = re.findall(rf"{tag}/(\w+)\.parquet", plan)
+        for t, c in Counter(tables).items():
+            if c > threshold and (name, t) not in ALLOWED:
+                offenders.append((name, t, c))
+    return offenders, skipped
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--threshold", type=int, default=3,
+    ap.add_argument("--threshold", type=int, default=THRESHOLD,
                     help="flag same-table scan counts above this")
     ap.add_argument("--sf", default="/root/testdata/sf0.001")
     args = ap.parse_args()
 
     sys.path.insert(0, os.path.dirname(os.path.dirname(
         os.path.abspath(__file__))))
-    from sql_database_engine_spark import operators as ops
     from sql_database_engine_spark.session import get_spark
 
-    ops.load_all()
     spark = get_spark("scan-audit", cpus=8)
-    tag = re.escape(os.path.basename(args.sf.rstrip("/")))
-    offenders = []
-    for name, fn in ops.QUERIES.items():
-        try:
-            df = fn(spark, args.sf)
-            plan = df._jdf.queryExecution().executedPlan().toString()
-        except Exception as e:  # staging/streaming machinery quirks
-            print(f"{name}: SKIP ({str(e)[:60]})")
-            continue
-        tables = re.findall(rf"{tag}/(\w+)\.parquet", plan)
-        for t, c in Counter(tables).items():
-            if c > args.threshold and (name, t) not in ALLOWED:
-                offenders.append((name, t, c))
-                print(f"{name}: {t} x{c}")
+    offenders, skipped = audit(spark, args.sf, args.threshold)
     spark.stop()
+    for name, err in skipped:
+        print(f"{name}: SKIP ({err})")
+    for name, t, c in offenders:
+        print(f"{name}: {t} x{c}")
     print(f"\n{len(offenders)} offender(s) above threshold "
           f"{args.threshold} outside the allowlist")
     return 1 if offenders else 0
