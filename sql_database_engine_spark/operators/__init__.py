@@ -151,8 +151,10 @@ def _driver_checked() -> set[str]:
                if n in QUERIES and n in stamps
                and stamps[n] != query_fingerprint(n)}
     # neardup_cluster_assignment reads embedding_neardup_pairs,
-    # rewritten as a one-shuffle bucket pairing.
-    rewritten_since_sampled: set[str] = {"neardup_cluster_assignment"}
+    # rewritten as a one-shuffle bucket pairing; minhash_quality_eval
+    # reads minhash_lsh_neardup, rewritten the same way.
+    rewritten_since_sampled: set[str] = {"neardup_cluster_assignment",
+                                         "minhash_quality_eval"}
     return seen - drifted - rewritten_since_sampled
 
 

@@ -1015,33 +1015,31 @@ def item_cf_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``basket_brand_pair_lift``: lift finds surprising pairs, cosine
     finds strong pairs (popularity-damped by both degrees).
 
-    One deduped basket aggregate, one (order-key-bounded) pair join,
-    degree joins by broadcast, TakeOrdered top-10.
+    One deduped basket aggregate, a per-order pair explode, names and
+    degrees from one broadcast map row, TakeOrdered top-10.
     """
     cat = Catalog(spark, sf_dir)
     # The basket-set relation feeds both the marginals and the pair
     # counts — checkpoint it so the lineitem⋈part derivation runs once
     # (different downstream keys: brand vs pair — the r11 rule).
-    dim = _brand_dim(cat)
     sets = _basket_sets(cat).localCheckpoint(eager=False)
-    deg = (sets.select(F.explode("bs").alias("bid"))
-           .groupBy("bid").agg(F.count(F.lit(1)).alias("n"))
-           .join(F.broadcast(dim), "bid").select("p_brand", "n"))
     ex = (sets.select(F.explode("bs").alias("sid"), "bs")
           .select("sid", F.explode("bs").alias("did"))
           .filter(F.col("sid") < F.col("did")))
     cnt = ex.groupBy("sid", "did").agg(F.count(F.lit(1)).alias("n_ab"))
-    pa = F.broadcast(dim.select(F.col("bid").alias("sid"),
-                                F.col("p_brand").alias("brand_a")))
-    pb = F.broadcast(dim.select(F.col("bid").alias("did"),
-                                F.col("p_brand").alias("brand_b")))
-    pairs = cnt.join(pa, "sid").join(pb, "did") \
-        .select("brand_a", "brand_b", "n_ab")
-    da = F.broadcast(deg.select(F.col("p_brand").alias("brand_a"),
-                                F.col("n").alias("n_a")))
-    db = F.broadcast(deg.select(F.col("p_brand").alias("brand_b"),
-                                F.col("n").alias("n_b")))
-    return (pairs.join(da, "brand_a").join(db, "brand_b")
+    # Names and degrees in ONE broadcast row, b: map<bid, struct<p_brand,
+    # n>> (the basket_brand_pair_lift shape), so the brand dictionary
+    # (a ``part`` scan) is derived once, not at each of its references.
+    b = F.broadcast(
+        sets.select(F.explode("bs").alias("bid"))
+        .groupBy("bid").agg(F.count(F.lit(1)).alias("n"))
+        .join(F.broadcast(_brand_dim(cat)), "bid")
+        .agg(F.map_from_entries(F.collect_list(F.struct(
+            "bid", F.struct("p_brand", "n")))).alias("b")))
+    return (cnt.crossJoin(b)
+            .selectExpr("b[sid].p_brand AS brand_a",
+                        "b[did].p_brand AS brand_b", "n_ab",
+                        "b[sid].n AS n_a", "b[did].n AS n_b")
             .select("brand_a", "brand_b", "n_ab", "n_a", "n_b",
                     # 128-bit lane: 10^12 * n_ab^2 overflows int64 once
                     # pair support passes ~3000 (seen at sf0.1) — the

@@ -30,7 +30,7 @@ from __future__ import annotations
 
 import json
 from decimal import ROUND_HALF_UP, Decimal
-from typing import Iterator, Tuple
+from typing import Callable, Iterator, Tuple
 
 import numpy as np
 import pandas as pd
@@ -392,21 +392,54 @@ def _neardup_pairs_sql() -> str:
     """
 
 
+def _bucket_pairs(rows: DataFrame, bands: int, key: str,
+                  agrees: Callable[[int], str], pair: str,
+                  emit: list[tuple[str, str]]) -> DataFrame:
+    """Banded-LSH pairing inside buckets: the one candidate step of the
+    near-duplicate operators.
+
+    ``rows`` carries one struct column ``r``. Each row is exploded into
+    its ``bands`` band rows and grouped on ``(band, bcode)`` with
+    ``collect_list``, where ``bcode`` is the ``key`` SQL over ``r`` and
+    ``band``. Each bucket list is exploded once, and every row ``r``
+    keeps the bucket-mates ``m`` that satisfy ``pair`` (SQL over ``r``
+    and ``m``) in the lowest band where the two agree (``agrees(b)`` is
+    the SQL test for band ``b``), so a pair comes from one bucket only:
+    no join, no ``distinct``, no re-join to verify. No array holds a
+    whole bucket's pairs.
+
+    Returns ``(r, pair)`` rows, ``pair`` a struct of the ``emit``
+    ``(name, SQL)`` fields. Work per bucket is quadratic in how full
+    the bucket is.
+    """
+    first_band = ("CASE " + " ".join(
+        f"WHEN {agrees(b)} THEN {b}" for b in range(bands - 1))
+        + f" ELSE {bands - 1} END")
+    fields = ", ".join(f"'{name}', {sql}" for name, sql in emit)
+    mates = F.expr(
+        f"transform(filter(rs, m -> {pair} AND {first_band} = band), "
+        f"m -> named_struct({fields}))")
+    buckets = (
+        rows.select("r", F.expr(f"explode(sequence(0, {bands - 1}))")
+                    .alias("band"))
+        .select("r", "band", F.expr(key).alias("bcode"))
+        .groupBy("band", "bcode").agg(F.collect_list("r").alias("rs")))
+    return (buckets.select("band", "rs", F.explode("rs").alias("r"))
+            .select("r", F.explode(mates).alias("pair")))
+
+
 @query("embedding_neardup_pairs", oracle=_neardup_pairs_sql())
 def embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-duplicate pairs via banded hyperplane LSH.
 
-    One scan, one shuffle, no join. Each vector's ``(vec_id, v, norm,
-    code)`` struct is built once, exploded into its 4 band rows and
-    grouped on ``(band, bcode)``, a key independent of any data column
-    (a fixed-cardinality key such as `label` would make every bucket
-    grow with the corpus). Each bucket list is exploded
-    once; every row is paired with its bucket-mates of larger
-    ``vec_id`` by a ``filter``/``transform`` over the list, so no array
-    ever holds a whole bucket's pairs. A pair is kept only in the
-    lowest band where the two codes agree, so it is unique without a
-    ``distinct``, and its rounded cosine is computed in the
-    generator's struct: one fold per candidate.
+    One scan, one shuffle, no join: :func:`_bucket_pairs` over each
+    vector's ``(vec_id, v, norm, code)`` struct, 4 bands keyed on the
+    band's code bits, a key independent of any data column (a
+    fixed-cardinality key such as `label` would make every bucket grow
+    with the corpus). Each vector keeps its larger-``vec_id``
+    bucket-mates in the lowest band where the two codes agree, and the
+    rounded cosine is computed in the emitted struct: one fold per
+    candidate.
 
     Each vector crosses the shuffle once per band, so the traced
     ``llm-pipeline`` pass writes 572 KB of shuffle where the join plan
@@ -426,29 +459,18 @@ def embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", F.col("embedding").alias("v"),
         F.sqrt(dot("embedding", "embedding")).alias("norm"),
         _neardup_code("embedding").alias("code")).alias("r"))
-    bcode = F.expr(f"(r.code >> (band * {_NEARDUP_BAND_BITS}))"
-                   f" & {_NEARDUP_BAND_MASK}")
-    buckets = (
-        vec.select("r", F.expr(f"explode(sequence(0, {_NEARDUP_BANDS - 1}))")
-                   .alias("band"))
-        .select("r", "band", bcode.alias("bcode"))
-        .groupBy("band", "bcode").agg(F.collect_list("r").alias("rs")))
-    # The lowest band where the two codes agree; a pair is kept only
-    # in that band's bucket, so it is emitted (and scored) once.
-    xor = "(r.code ^ m.code)"
-    first_band = ("CASE " + " ".join(
-        f"WHEN (({xor} >> {b * _NEARDUP_BAND_BITS}) & {_NEARDUP_BAND_MASK})"
-        f" = 0 THEN {b}" for b in range(_NEARDUP_BANDS - 1))
-        + f" ELSE {_NEARDUP_BANDS - 1} END")
     score = _nan_div_sql(_dot_sql("r.v", "m.v"), "r.norm * m.norm")
-    mates = F.expr(
-        f"transform(filter(rs, m -> m.vec_id > r.vec_id AND {first_band} = band), "
-        f"m -> named_struct('vec_b', m.vec_id, 'cos_sim', round({score}, 6)))")
     return (
-        buckets.select("band", "rs", F.explode("rs").alias("r"))
-        .select(F.col("r.vec_id").alias("vec_a"),
-                F.explode(mates).alias("pair"))
-        .select("vec_a", "pair.vec_b", "pair.cos_sim")
+        _bucket_pairs(
+            vec, _NEARDUP_BANDS,
+            key=f"(r.code >> (band * {_NEARDUP_BAND_BITS}))"
+                f" & {_NEARDUP_BAND_MASK}",
+            agrees=lambda b: f"(((r.code ^ m.code) >> {b * _NEARDUP_BAND_BITS})"
+                             f" & {_NEARDUP_BAND_MASK}) = 0",
+            pair="m.vec_id > r.vec_id",
+            emit=[("vec_b", "m.vec_id"),
+                  ("cos_sim", f"round({score}, 6)")])
+        .select(F.col("r.vec_id").alias("vec_a"), "pair.vec_b", "pair.cos_sim")
         # Spark orders NaN above every number; a zero vector's NaN
         # score is not a near-duplicate (DuckDB scores it -1.0).
         .filter((F.col("cos_sim") >= 0.25) & ~F.isnan("cos_sim"))

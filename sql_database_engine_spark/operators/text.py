@@ -324,10 +324,11 @@ def _mh_coeffs() -> list[tuple[int, int]]:
 
 
 def _mh_signatures(d: DataFrame) -> DataFrame:
-    """Per-doc MinHash signature columns mh0..mh{N-1}: gram hashed
-    once, the permutation mins as vectorized partial aggregates.
-    Shared by the batch and incremental operators — one signature
-    scheme, one place to change it.
+    """Per-doc MinHash signature ``(doc_id, s)``, ``s`` the array of
+    the N permutation mins: gram hashed once, the mins as vectorized
+    partial aggregates.
+    Shared by the batch, incremental and banding-sweep operators —
+    one signature scheme, one place to change it.
 
     r12 shape (guide §2.3 — aggregate before you shuffle): bigrams
     come from explode(arrays_zip(slice, slice)) — a map-side array
@@ -350,28 +351,35 @@ def _mh_signatures(d: DataFrame) -> DataFrame:
                 .withColumn(
                     "h", F.conv(F.substring(F.md5("gram"), 1, 8), 16, 10)
                     .cast("long")))
-    return exploded.groupBy("doc_id").agg(*[
-        F.min((F.col("h") * a + b) % _MH_P).alias(f"mh{i}")
-        for i, (a, b) in enumerate(_mh_coeffs())
-    ])
+    return exploded.groupBy("doc_id").agg(F.array(*[
+        F.min((F.col("h") * a + b) % _MH_P)
+        for a, b in _mh_coeffs()
+    ]).alias("s"))
 
 
-def _mh_bands(signed: DataFrame, *extra_cols: str) -> DataFrame:
-    """Band rows (doc_id, *extra_cols, band_id, band_key) from the
-    signature columns."""
-    return signed.select(
-        "doc_id", *extra_cols,
-        F.explode(F.array(*[
-            F.struct(
-                F.lit(i).alias("band_id"),
-                F.concat_ws("-", *[
-                    F.col(f"mh{i * _MH_ROWS_PER_BAND + r}").cast("string")
-                    for r in range(_MH_ROWS_PER_BAND)
-                ]).alias("band_key"),
-            )
-            for i in range(_MH_BANDS)
-        ])).alias("band"),
-    ).select("doc_id", *extra_cols, "band.band_id", "band.band_key")
+#: Signature agreement of a bucket pair: how many of the N
+#: permutation mins ``r.s`` and ``m.s`` share, as the estimated Jaccard.
+_MH_EST_JACCARD = (
+    "CAST(size(filter(zip_with(r.s, m.s, (x, y) -> x = y), t -> t))"
+    f" AS DOUBLE) / {_MH_N_PERM}")
+
+
+def _mh_bucket_pairs(rows: DataFrame, bands: int, rows_per_band: int,
+                     pair: str, emit: list[tuple[str, str]]) -> DataFrame:
+    """:func:`_bucket_pairs` over signature structs ``r = (id, s, ...)``
+    banded ``bands`` x ``rows_per_band``: band ``b``'s bucket key is
+    its slice of ``s``, and two docs agree in it when every min of the
+    slice is equal."""
+    from .similarity import _bucket_pairs
+
+    def agrees(b: int) -> str:
+        return " AND ".join(f"r.s[{k}] = m.s[{k}]" for k in range(
+            b * rows_per_band, (b + 1) * rows_per_band))
+
+    return _bucket_pairs(
+        rows, bands,
+        key=f"slice(r.s, band * {rows_per_band} + 1, {rows_per_band})",
+        agrees=agrees, pair=pair, emit=emit)
 
 
 def _mh_sql_parts() -> tuple[str, str, str, str]:
@@ -465,60 +473,31 @@ def _minhash_incremental_oracle() -> str:
 def minhash_lsh_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash + LSH near-dup candidates: 32 permutations, 8 bands × 4
     rows. Pipeline: word-bigram shingles → per-permutation min of
-    (a_i * h(gram) + b_i mod p) → band signatures → exact-match
-    join on (band_id, band_signature) → candidate pairs verified by
-    signature agreement >= 0.5.
+    (a_i * h(gram) + b_i mod p) → band buckets → pairs inside each
+    bucket verified by signature agreement >= 0.5.
 
-    The band join is an equi-join on a short hash — at 100 TB the
-    shuffle carries (band_key, doc_id) pairs only, and bucket sizes
+    One ``documents`` scan and no join: :func:`_mh_bucket_pairs` groups
+    each band bucket once, keeps a pair only in its lowest agreeing
+    band, and scores it from the two signatures already in the bucket,
+    so there is no ``distinct`` and no signature re-join. Bucket sizes
     are capped by banding probability, not corpus size. The gram hash
     is md5-derived (first 8 hex digits as int) rather than crc32:
     ~equally cheap at this width, and expressible in DuckDB, which
     upgrades this operator from rows-only to fully oracle-checked —
     the oracle replays permutations, banding, and agreement verbatim.
     """
-    d = Catalog(spark, sf_dir).documents
     # Permutation arithmetic stays within int64 under ANSI mode:
     # h < 2^32 and a,b < 2^30 keep h*a+b < 2^63 (no overflow).
-    # Signature via explode + hash-aggregate: the gram hashed ONCE,
-    # the 32 permutation mins run as vectorized partial aggs map-side
-    # (the shuffle carries at most one partial row per doc per
-    # partition) — both faster locally and the right shape at 100 TB.
-    N_PERM = _MH_N_PERM
-    # Materialize the signature relation once (lazy localCheckpoint):
-    # it feeds both band-join sides AND both verify sides — without
-    # the checkpoint the explode+hash+32-min pipeline re-derives 4x
-    # (plan audit r11: 4 documents scans, 0 reused exchanges), a 4x
-    # corpus re-read at 100 TB. Values are unchanged (deterministic
-    # pipeline); the r4 scan-audit precedent.
-    signed = _mh_signatures(d).localCheckpoint(eager=False)
-    bands = _mh_bands(signed)
-
-    # Candidates dedup on the (doc_a, doc_b) ids alone — hashing two
-    # 32-element signature arrays through the distinct would shuffle
-    # them 8× (once per colliding band).
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(b, (F.col("a.band_id") == F.col("b.band_id"))
-               & (F.col("a.band_key") == F.col("b.band_key"))
-               & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    # Verify candidates by signature agreement: re-join the (small)
-    # per-doc signatures, compare column-wise — a codegen'd sum of 32
-    # equality flags, no array zip needed.
-    sig_a = signed.select(F.col("doc_id").alias("doc_a"),
-                          *[F.col(f"mh{i}").alias(f"a{i}") for i in range(N_PERM)])
-    sig_b = signed.select(F.col("doc_id").alias("doc_b"),
-                          *[F.col(f"mh{i}").alias(f"b{i}") for i in range(N_PERM)])
-    agree = sum(
-        (F.col(f"a{i}") == F.col(f"b{i}")).cast("int") for i in range(N_PERM))
+    rows = (_mh_signatures(Catalog(spark, sf_dir).documents)
+            .selectExpr("struct(doc_id AS id, s) AS r"))
     return (
-        cand.join(sig_a, "doc_a").join(sig_b, "doc_b")
-        .withColumn("est_jaccard", agree.cast("double") / N_PERM)
+        _mh_bucket_pairs(rows, _MH_BANDS, _MH_ROWS_PER_BAND,
+                         pair="m.id > r.id",
+                         emit=[("doc_b", "m.id"),
+                               ("est_jaccard", _MH_EST_JACCARD)])
+        .select(F.col("r.id").alias("doc_a"), "pair.doc_b",
+                "pair.est_jaccard")
         .filter(F.col("est_jaccard") >= 0.5)
-        .select("doc_a", "doc_b", "est_jaccard")
     )
 
 
@@ -568,8 +547,8 @@ def simhash_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit pattern weighted ±1; the sign vector packs into a fingerprint.
     Near-dup = small Hamming distance; here we emit the fingerprint
     plus a 16-bit prefix block useful for banded Hamming search
-    (Manku et al., WWW'07). Pure column expressions — the 64 bit
-    positions unroll into an array comprehension, no UDF. The bit
+    (Manku et al., WWW'07). Pure SQL expressions — the 64 bit
+    positions unroll into one aggregate expression, no UDF. The bit
     source is the two 32-bit halves of one md5 per token (was crc32:
     same cost at this width, but md5 is DuckDB-expressible, which
     upgrades both SimHash queries from rows-only to oracle-checked)."""
@@ -584,26 +563,17 @@ def simhash_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
                         .cast("long"))
             .withColumn("h2", F.conv(F.substring("md5", 9, 8), 16, 10)
                         .cast("long")))
-    votes = toks.groupBy("doc_id").agg(*[
-        F.sum(
-            F.when(
-                F.col("h1" if i < 32 else "h2")
-                .bitwiseAND(F.lit(1 << (i % 32))) != 0, 1
-            ).otherwise(-1)
-        ).alias(f"v{i}")
-        for i in range(64)
-    ])
-    fp = None
-    for i in range(64):
-        bit = F.when(F.col(f"v{i}") > 0,
-                     F.lit(1).cast("long")).otherwise(F.lit(0).cast("long"))
-        term = F.shiftleft(bit, i)
-        fp = term if fp is None else fp.bitwiseOR(term)
-    return votes.select(
-        "doc_id",
-        fp.alias("simhash64"),
-        F.shiftrightunsigned(fp, 48).alias("band_prefix16"),
-    )
+    # The 64 vote sums and the sign pack as ONE SQL text: the same
+    # arithmetic built from Column calls cost several hundred JVM round
+    # trips at every build.
+    votes = [f"sum(CASE WHEN ({'h1' if i < 32 else 'h2'} & {1 << (i % 32)})"
+             " != 0 THEN 1 ELSE -1 END)" for i in range(64)]
+    fp = " | ".join(
+        f"shiftleft(CASE WHEN {v} > 0 THEN CAST(1 AS BIGINT)"
+        f" ELSE CAST(0 AS BIGINT) END, {i})" for i, v in enumerate(votes))
+    return (toks.groupBy("doc_id").agg(F.expr(fp).alias("simhash64"))
+            .selectExpr("doc_id", "simhash64",
+                        "shiftrightunsigned(simhash64, 48) AS band_prefix16"))
 
 
 @query(
@@ -664,7 +634,16 @@ def simhash_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     verified with bit_count(xor) <= HAMMING_MAX.
 
     At 100 TB: 4 equi-joins on 16-bit keys + dedup — bucket sizes are
-    bounded by fingerprint entropy, never corpus size."""
+    bounded by fingerprint entropy, never corpus size.
+
+    This is the one LSH operator that does not pair inside its buckets
+    with :func:`_bucket_pairs`: its 16-bit blocks are skewed (at sf0.1
+    one block-0 bucket holds 1,639 of 5,000 docs), and on that input
+    the interpreted in-list ``filter`` lost to this codegen'd block
+    join: 1.65 s for the join against 3.22 s median wall (5 interleaved
+    ``noop`` drains, 4 cores), with equal rows (166,267). The join
+    already keeps a pair only in its lowest agreeing block, so it needs
+    no ``distinct``."""
     HAMMING_MAX = 3
     # NOTE: both self-join sides recompute the fingerprint lineage;
     # persisting it was measured SLOWER in the end-to-end query (cache
@@ -2487,8 +2466,9 @@ def minhash_incremental_neardup(spark: SparkSession,
     actually runs: the new batch (doc_id % 10 >= 8) is checked
     against the persisted BAND INDEX of the historical corpus plus
     earlier batch docs, never all-pairs over the archive. Each batch
-    doc's band signatures probe the index via the same (band_id,
-    band_key) equi-join as the batch operator; matches verify by
+    doc meets its partners in the same band buckets as the batch
+    operator (:func:`_mh_bucket_pairs`, one ``documents`` scan and no
+    join); matches verify by
     signature agreement >= 0.5 and report whether the partner came
     from the index or from within the batch (keep-first discipline:
     only earlier batch ids count as partners).
@@ -2500,43 +2480,22 @@ def minhash_incremental_neardup(spark: SparkSession,
     shared pipeline-replay fragments (md5 gram hashes, fixed
     permutation coefficients).
     """
-    d = Catalog(spark, sf_dir).documents
-    N_PERM = _MH_N_PERM
-    signed = _mh_signatures(d)
-    bands = _mh_bands(
-        signed.withColumn("is_batch", F.col("doc_id") % 10 >= 8),
-        "is_batch")
-
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(b, (F.col("a.band_id") == F.col("b.band_id"))
-               & (F.col("a.band_key") == F.col("b.band_key"))
-               & F.col("b.is_batch")
-               & (~F.col("a.is_batch")
-                  | (F.col("a.doc_id") < F.col("b.doc_id")))
-               & (F.col("a.doc_id") != F.col("b.doc_id")))
-        .select(F.col("a.doc_id").alias("partner_doc"),
-                F.col("a.is_batch").alias("partner_is_batch"),
-                F.col("b.doc_id").alias("batch_doc"))
-        .distinct()
-    )
-    sig_a = signed.select(F.col("doc_id").alias("partner_doc"),
-                          *[F.col(f"mh{i}").alias(f"a{i}")
-                            for i in range(N_PERM)])
-    sig_b = signed.select(F.col("doc_id").alias("batch_doc"),
-                          *[F.col(f"mh{i}").alias(f"b{i}")
-                            for i in range(N_PERM)])
-    agree = sum(
-        (F.col(f"a{i}") == F.col(f"b{i}")).cast("int")
-        for i in range(N_PERM))
+    rows = (_mh_signatures(Catalog(spark, sf_dir).documents)
+            .selectExpr("struct(doc_id AS id, s, doc_id % 10 >= 8 AS batch)"
+                        " AS r"))
+    # r is the batch doc, m its partner: an index doc or an earlier
+    # batch doc.
     return (
-        cand.join(sig_a, "partner_doc").join(sig_b, "batch_doc")
-        .withColumn("est_jaccard", agree.cast("double") / N_PERM)
+        _mh_bucket_pairs(rows, _MH_BANDS, _MH_ROWS_PER_BAND,
+                         pair="r.batch AND (NOT m.batch OR m.id < r.id)"
+                              " AND m.id <> r.id",
+                         emit=[("partner_doc", "m.id"),
+                               ("partner_src", "CASE WHEN m.batch"
+                                " THEN 'batch' ELSE 'index' END"),
+                               ("est_jaccard", _MH_EST_JACCARD)])
+        .select(F.col("r.id").alias("batch_doc"), "pair.partner_doc",
+                "pair.partner_src", "pair.est_jaccard")
         .filter(F.col("est_jaccard") >= 0.5)
-        .select("batch_doc", "partner_doc",
-                F.when(F.col("partner_is_batch"), F.lit("batch"))
-                .otherwise(F.lit("index")).alias("partner_src"),
-                "est_jaccard")
     )
 
 
@@ -3241,46 +3200,25 @@ def lsh_banding_tradeoff_sweep(spark: SparkSession,
     recall-vs-compute before anyone re-signs the corpus — the LSH
     sibling of ``jaccard_threshold_sweep``.
 
-    Scale: signatures are computed once; each config is an equi-join
-    on its band key (bucket-bounded, never all-pairs); the result is
-    three rows.
+    Scale: signatures are computed once; each config pairs docs
+    inside its band buckets (:func:`_mh_bucket_pairs`: bucket-bounded,
+    never all-pairs, no join or ``distinct``); the result is three
+    rows.
     """
-    d = Catalog(spark, sf_dir).documents
-    signed = _mh_signatures(d).localCheckpoint(eager=False)
-    rows = []
+    rows = (_mh_signatures(Catalog(spark, sf_dir).documents)
+            .selectExpr("struct(doc_id AS id, s) AS r")
+            .localCheckpoint(eager=False))
+    out = None
     for b, r in _lsh_configs():
-        bands = signed.select(
-            "doc_id",
-            F.explode(F.array(*[
-                F.struct(
-                    F.lit(i).alias("band_id"),
-                    F.concat_ws("-", *[
-                        F.col(f"mh{i * r + j}").cast("string")
-                        for j in range(r)]).alias("band_key"))
-                for i in range(b)])).alias("bd")
-        ).select("doc_id", "bd.band_id", "bd.band_key")
-        a = bands.select(F.col("doc_id").alias("doc_a"),
-                         "band_id", "band_key")
-        bb = bands.select(F.col("doc_id").alias("doc_b"),
-                          F.col("band_id").alias("band_id_b"),
-                          F.col("band_key").alias("band_key_b"))
-        cand = (a.join(bb, (F.col("band_id") == F.col("band_id_b"))
-                       & (F.col("band_key") == F.col("band_key_b"))
-                       & (F.col("doc_a") < F.col("doc_b")))
-                .select("doc_a", "doc_b").distinct()
-                .localCheckpoint(eager=False))
-        n_pairs = cand.agg(
-            F.count(F.lit(1)).alias("n_candidate_pairs"))
-        n_docs = (cand.select(F.explode(F.array("doc_a", "doc_b"))
-                              .alias("d"))
-                  .agg(F.countDistinct("d").alias("n_docs_involved")))
-        rows.append(
-            n_pairs.crossJoin(F.broadcast(n_docs))
-            .select(F.lit(f"{b}x{r}").alias("config"),
-                    "n_candidate_pairs", "n_docs_involved"))
-    out = rows[0]
-    for x in rows[1:]:
-        out = out.unionByName(x)
+        # Pairs are unique by construction: each pair puts its two
+        # docs in two rows.
+        docs = (_mh_bucket_pairs(rows, b, r, pair="m.id > r.id",
+                                 emit=[("id", "m.id")])
+                .select(F.explode(F.array("r.id", "pair.id")).alias("d")))
+        stats = (docs.agg(F.expr("count(1) div 2").alias("n_candidate_pairs"),
+                          F.countDistinct("d").alias("n_docs_involved"))
+                 .select(F.lit(f"{b}x{r}").alias("config"), "*"))
+        out = stats if out is None else out.unionByName(stats)
     return out.orderBy("config")
 
 

@@ -34,6 +34,15 @@ def duck():
     con.close()
 
 
+@pytest.fixture(scope="session")
+def registry_plans(spark):
+    """Every registered query's executed plan over ``SF_SMOKE`` by
+    name, and the ``(query, error)`` pairs that could not be planned:
+    one planning pass that every registry-wide plan audit reads."""
+    import scan_audit
+    return scan_audit.registry_plans(spark, SF_SMOKE)
+
+
 def jobs_started(spark, group: str, call):
     """Run ``call`` under job group ``group``; its result and the
     number of Spark jobs it started."""

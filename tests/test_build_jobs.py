@@ -21,6 +21,8 @@ from .conftest import SF_SMOKE, jobs_started
     ("bfs_brand_distances", 22),
     ("mmr_diversified_topk", 1),
     ("embedding_neardup_pairs", 0),
+    ("minhash_lsh_neardup", 0),
+    ("lsh_banding_tradeoff_sweep", 1),
 ])
 def test_build_job_count(spark, name, jobs):
     from sql_database_engine_spark import operators

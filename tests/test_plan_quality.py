@@ -194,6 +194,17 @@ def test_neardup_pairs_drain_starts_at_most_two_jobs(spark):
     assert jobs <= 2
 
 
+@pytest.mark.parametrize(
+    "name", ["minhash_lsh_neardup", "minhash_incremental_neardup"])
+def test_minhash_pairs_one_scan_no_join(spark, name):
+    """MinHash candidates pair inside their band buckets: one
+    ``documents`` scan, no band self-join and no signature re-join."""
+    plan = _plan(spark, name)
+    assert plan.count("FileScan parquet") == 1
+    assert "documents.parquet" in plan
+    assert "Join" not in plan, plan
+
+
 def test_connected_components_pointer_jumping_rounds(spark):
     """Pointer jumping must converge in O(log diameter) rounds: a
     63-edge path graph (diameter 63) has to finish in <= 8 rounds,
@@ -1123,8 +1134,10 @@ def test_wape_lag_is_equi_join_on_day_index(spark):
 def test_item_cf_topk_is_take_ordered(spark):
     plan = _plan(spark, "item_cf_similarity")
     assert "TakeOrderedAndProject" in plan
-    assert plan.count("BroadcastHashJoin") >= 2  # both degree joins
     assert "CartesianProduct" not in plan
+    # names and degrees come from one broadcast map row, so the brand
+    # dictionary is derived (and `part` scanned) once
+    assert plan.count("/part.parquet") == 1
 
 
 def test_currency_rates_broadcast_dimension(spark):

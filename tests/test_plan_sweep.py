@@ -1,8 +1,8 @@
 """Whole-registry physical-plan sweep.
 
-Every registered batch query gets its physical plan built (planning
-only — nothing executes) and audited against the two anti-patterns
-that are never acceptable at 100 TB:
+Every registered batch query's physical plan (planning only — nothing
+executes) is audited against the two anti-patterns that are never
+acceptable at 100 TB:
 
 - ``CartesianProduct`` — an unkeyed all-pairs join. Deliberate 1-row
   scalar broadcasts plan as BroadcastNestedLoopJoin, which is allowed.
@@ -12,16 +12,17 @@ that are never acceptable at 100 TB:
   one deliberate row-Python demo is the UDTF (whitelisted, its codegen
   twin is the production path).
 
-Streaming drains and layout-staging queries are skipped: building
-their "plan" executes work (availableNow drains / ensure-* writes),
-and their shapes are pinned by their own dedicated tests.
+Streaming drains and layout-staging queries skip those two checks:
+building their "plan" executes work (availableNow drains / ensure-*
+writes), and their shapes are pinned by their own dedicated tests.
+
+The plans come from the session's one registry planning pass (the
+``registry_plans`` fixture), which ``test_scan_audit`` reads too for
+the same-table scan count. A query that cannot be planned is not
+audited at all, so it fails the sweep.
 """
 
 from __future__ import annotations
-
-import pytest
-
-from .conftest import SF_SMOKE
 
 #: Queries whose invocation executes work instead of just planning.
 _EXECUTES_ON_BUILD = {
@@ -34,18 +35,13 @@ _EXECUTES_ON_BUILD = {
 _ROW_PYTHON_OK = {"udtf_doc_chunks"}
 
 
-def _batch_queries():
-    from sql_database_engine_spark import operators
-    operators.load_all()
-    return {n: fn for n, fn in operators.QUERIES.items()
-            if not n.startswith("stream_") and n not in _EXECUTES_ON_BUILD}
-
-
-def test_registry_plans_free_of_scale_antipatterns(spark):
-    """One planning pass over the whole registry, both audits."""
+def test_registry_plans_free_of_scale_antipatterns(registry_plans):
+    """Both anti-pattern audits over the one registry planning pass."""
+    plans, skipped = registry_plans
     cartesian, row_python = [], []
-    for name, fn in _batch_queries().items():
-        plan = fn(spark, SF_SMOKE)._jdf.queryExecution().executedPlan().toString()
+    for name, plan in plans.items():
+        if name.startswith("stream_") or name in _EXECUTES_ON_BUILD:
+            continue
         if "CartesianProduct" in plan:
             cartesian.append(name)
         if name not in _ROW_PYTHON_OK:
@@ -58,3 +54,4 @@ def test_registry_plans_free_of_scale_antipatterns(spark):
                     break
     assert not cartesian, f"unkeyed all-pairs joins in: {cartesian}"
     assert not row_python, f"row-at-a-time Python in: {row_python}"
+    assert skipped == []

@@ -10,8 +10,10 @@ is a lazy localCheckpoint on the reused relation.
 
 Usage: python tools/scan_audit.py [--threshold 3]
 
-``tests/test_scan_audit.py`` runs the same :func:`audit`, so a scan
-regression fails the test suite.
+``tests/test_scan_audit.py`` runs :func:`over_threshold` on the plans
+of the test session's one :func:`registry_plans` pass (shared with
+``tests/test_plan_sweep.py``), so a scan regression fails the test
+suite.
 
 Exit 0 when nothing exceeds the threshold outside the documented
 allowlist (multi-stage index builds whose scans are distinct
@@ -39,8 +41,6 @@ ALLOWED = {
     ("ann_recall_contract", "embeddings"),
     ("centroid_cosine_matrix", "embeddings"),
     ("minhash_quality_eval", "documents"),
-    ("minhash_lsh_neardup", "documents"),
-    ("minhash_incremental_neardup", "documents"),
     ("setsim_prefix_join", "documents"),
     ("bm25_keyword_topk", "documents"),
     ("boolean_and_search", "documents"),
@@ -56,8 +56,6 @@ ALLOWED = {
     ("event_value_mad_outliers", "events"),
     ("mad_outlier_census", "events"),
     ("bitmap_retention_churn", "events"),
-    ("item_cf_similarity", "lineitem"),
-    ("item_cf_similarity", "part"),
 }
 
 
@@ -65,27 +63,42 @@ ALLOWED = {
 THRESHOLD = 3
 
 
+def over_threshold(name: str, plan: str, sf: str,
+                   threshold: int = THRESHOLD) -> list[tuple[str, str, int]]:
+    """The ``(query, table, scans)`` triples of one physical plan
+    string that scan a table of ``sf`` more than ``threshold`` times,
+    outside :data:`ALLOWED`."""
+    tag = re.escape(os.path.basename(sf.rstrip("/")))
+    tables = re.findall(rf"{tag}/(\w+)\.parquet", plan)
+    return [(name, t, c) for t, c in Counter(tables).items()
+            if c > threshold and (name, t) not in ALLOWED]
+
+
+def registry_plans(spark, sf: str):
+    """Plan every registered query over ``sf``. Returns its executed
+    physical plan string by query name, and the ``(query, error)``
+    pairs that could not be planned."""
+    from sql_database_engine_spark import operators as ops
+
+    ops.load_all()
+    plans, skipped = {}, []
+    for name, fn in ops.QUERIES.items():
+        try:
+            df = fn(spark, sf)
+            plans[name] = df._jdf.queryExecution().executedPlan().toString()
+        except Exception as e:  # staging/streaming machinery quirks
+            skipped.append((name, str(e)[:60]))
+    return plans, skipped
+
+
 def audit(spark, sf: str, threshold: int = THRESHOLD):
     """Plan every registered query over ``sf``. Returns the
     ``(query, table, scans)`` triples above ``threshold`` outside
     :data:`ALLOWED`, and the ``(query, error)`` pairs that could not
     be planned."""
-    from sql_database_engine_spark import operators as ops
-
-    ops.load_all()
-    tag = re.escape(os.path.basename(sf.rstrip("/")))
-    offenders, skipped = [], []
-    for name, fn in ops.QUERIES.items():
-        try:
-            df = fn(spark, sf)
-            plan = df._jdf.queryExecution().executedPlan().toString()
-        except Exception as e:  # staging/streaming machinery quirks
-            skipped.append((name, str(e)[:60]))
-            continue
-        tables = re.findall(rf"{tag}/(\w+)\.parquet", plan)
-        for t, c in Counter(tables).items():
-            if c > threshold and (name, t) not in ALLOWED:
-                offenders.append((name, t, c))
+    plans, skipped = registry_plans(spark, sf)
+    offenders = [o for name, plan in plans.items()
+                 for o in over_threshold(name, plan, sf, threshold)]
     return offenders, skipped
 
 
