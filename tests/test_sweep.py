@@ -1,6 +1,7 @@
 """The replica-differential harness (tools/sweep.py) checked on its own:
-the comparator every differential test shares, and every replica kind's
-staging plus perturbation proof at sf0.001."""
+the comparator every differential test shares, every replica kind's
+staging plus perturbation proof at sf0.001, and the exact-Jaccard pair
+queries on the ``salt:10`` replica."""
 
 from __future__ import annotations
 
@@ -44,3 +45,36 @@ def test_kind_stages_a_perturbed_replica(spark, tmp_path, monkeypatch, kind):
     assert sweep.KINDS[kind].perturbed(proof), proof
     if replica != SF_SMOKE:
         assert replica.startswith(str(tmp_path))
+
+
+@pytest.mark.parametrize("name", ["ngram_jaccard_neardup",
+                                  "setsim_prefix_join"])
+def test_salt_replica_repeats_base_pairs_per_replica(spark, tmp_path,
+                                                     monkeypatch, name):
+    """Exact bigram Jaccard is 0 across the salt replicas' disjoint
+    vocabularies, so on ``salt:10`` each pair query returns exactly the
+    base result's pairs once per replica doc-id offset: no pair crosses
+    replicas and near-dup density stays 1.000."""
+    import duckdb
+
+    from sql_database_engine_spark import operators, scratch
+
+    monkeypatch.setattr(scratch, "SCRATCH_ROOT", str(tmp_path))
+    replica, _ = sweep.stage_replica("salt:10", SF_SMOKE)
+    offset = duckdb.sql(f"SELECT max(doc_id) + 1 FROM read_parquet("
+                        f"'{SF_SMOKE}/documents.parquet')").fetchone()[0]
+    operators.load_all()
+    q = operators.QUERIES[name]
+    base = q(spark, SF_SMOKE)
+    cols = base.columns
+    a, b = cols.index("doc_a"), cols.index("doc_b")
+
+    def shifted(row, i):
+        r = list(row)
+        r[a] += i * offset
+        r[b] += i * offset
+        return tuple(r)
+    base_rows = [tuple(r) for r in base.collect()]
+    assert base_rows
+    got = sorted(tuple(r) for r in q(spark, replica).select(*cols).collect())
+    assert got == sorted(shifted(r, i) for r in base_rows for i in range(10))

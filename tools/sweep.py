@@ -43,6 +43,7 @@ failed, else 0.
 Usage (``--sf`` defaults to the catalog's testdata directory):
     python tools/sweep.py --replica null:full --sf <testdata>/sf0.001
     python tools/sweep.py --replica identity --tag r5_cert
+    python tools/sweep.py --replica scale:10 --sf <testdata>/sf0.1
     python tools/sweep.py --replica tz:spring --only timezone_daily_rollup
     python tools/sweep.py --replica identity --prove-capture --only setop_except_all
 """
@@ -239,7 +240,12 @@ def _null_ok(proof: dict) -> bool:
                for p in proof.values())
 
 
-_FACTS = ("orders", "lineitem", "events", "documents", "embeddings")
+#: fact table -> its surrogate key. ``lineitem`` carries its order's
+#: key, so a replicated order keeps its line items.
+_FACT_KEYS = {"orders": "o_orderkey", "lineitem": "l_orderkey",
+              "events": "event_id", "documents": "doc_id",
+              "embeddings": "vec_id"}
+_FACTS = tuple(_FACT_KEYS)
 
 
 def _empty_kind(targets: dict[str, int]) -> Callable:
@@ -363,6 +369,188 @@ def _unicode_ok(proof: dict) -> bool:
             and p["source_multibyte_rows"] == 0)
 
 
+def _replicate_kind(factor: int, tables: tuple[str, ...],
+                    exprs: dict[str, dict[str, str]],
+                    scaled: dict[str, dict[str, str]],
+                    zero: dict[str, dict[str, str]]) -> Callable:
+    """``factor`` copies of each table in ``tables``; the rest copy
+    as-is. Copy ``_rep`` (0 is the source) adds ``_rep`` times one past
+    the largest source key of ``tables`` to every key, so the copies'
+    keyspaces never collide; ``exprs[t]`` rewrites further columns of
+    copy ``_rep``. Proof: each replicated table has exactly ``factor``
+    times the source's rows, distinct keys and ``scaled[t]`` aggregates;
+    every other table keeps its rows; each ``zero[t]`` aggregate
+    (``{replica}`` is the replica directory) is 0 on the replica."""
+    def transform(t, cols, src):
+        if t not in tables:
+            return _select(src, cols, {})
+        sf_dir = os.path.dirname(src)
+        offset = "(SELECT max(k) + 1 FROM ({}))".format(" UNION ALL ".join(
+            f"SELECT max({_FACT_KEYS[u]}) AS k"
+            f" FROM read_parquet('{_src(sf_dir, u)}')" for u in tables))
+        key = _FACT_KEYS[t]
+        return _select(src, cols, {
+            key: f'CAST("{key}" + _rep * {offset} AS BIGINT)',
+            **exprs.get(t, {})},
+            f", range({factor}) _r(_rep)")
+
+    def prove(con, sf_dir, replica):
+        proof = {}
+        for t in TABLES:
+            aggs = {"rows": "count(*)"}
+            if t in tables:
+                aggs.update(keys=f'count(DISTINCT "{_FACT_KEYS[t]}")',
+                            **scaled.get(t, {}))
+            proof[t] = {
+                "factor": factor if t in tables else 1,
+                "scaled": {k: [_scalar(con, _src(sf_dir, t), a),
+                               _scalar(con, _src(replica, t), a)]
+                           for k, a in aggs.items()},
+                "zero": {k: _scalar(con, _src(replica, t),
+                                    a.format(replica=replica))
+                         for k, a in zero.get(t, {}).items()}}
+        return proof
+    return _copy_stage(transform, prove)
+
+
+def _replicate_ok(proof: dict) -> bool:
+    return all(dst == p["factor"] * src
+               for p in proof.values() for src, dst in p["scaled"].values()
+               ) and not any(n for p in proof.values()
+                             for n in p["zero"].values())
+
+
+_SCALE_ZERO = {"lineitem": {"orphan_lines": (
+    "count(*) FILTER (l_orderkey NOT IN (SELECT o_orderkey"
+    " FROM read_parquet('{replica}/orders.parquet')))")}}
+
+#: Copy ``_rep`` >= 1 renames every space-split token t to t_r<_rep>.
+_SALTED = ("CASE WHEN _rep = 0 THEN text ELSE array_to_string("
+           "list_transform(string_split(text, ' '), t -> t || '_r' || _rep),"
+           " ' ') END")
+
+_SALT_EXPRS = {"documents": {
+    "text": _SALTED, "n_chars": f"CAST(length({_SALTED}) AS BIGINT)"}}
+_SALT_SCALED = {"documents": {
+    "tokens": "length(list_distinct(flatten(list(string_split(text, ' ')))))"}}
+_SALT_ZERO = {"documents": {
+    "n_chars_off": "count(*) FILTER (n_chars IS DISTINCT FROM length(text))"}}
+
+#: ``scale:10``'s default queries: the overflow cohort, whose scalings
+#: use DECIMAL(38,0)/HUGEINT lanes (the ``10^k * count * count`` rule
+#: in PERF.md), plus the moment-heavy OLS/Theil-Sen/correlation
+#: relatives whose integer moments grow quadratically in replicated
+#: values. Derived by scanning sources for decimal(38 / HUGEINT;
+#: re-derive when adding lanes.
+_OVERFLOW_QUERIES = (
+    "revenue_gini_coefficient",
+    "share_of_parent_rollup",
+    "abc_pareto_classes",
+    "diff_in_diff_estimate",
+    "simpson_paradox_check",
+    "trend_daily_revenue_ols",
+    "cusum_changepoint",
+    "twap_user_value",
+    "autocorrelation_daily_revenue",
+    "forecast_wape_eval",
+    "token_cooccurrence_lift",
+    "centroid_cosine_matrix",
+    "pca_power_iteration",
+    "kfold_auc_eval",
+    "score_auc_exact",
+    "ks_statistic_value_drift",
+    "key_skew_gini",
+    "item_cf_similarity",
+    # moment-heavy relatives without explicit 128-bit lanes (their
+    # int64 headroom is the thing under test)
+    "theil_sen_trend",
+    "rolling_ols_slope_7d",
+    "corr_value_hour_exact",
+    "seasonal_decomposition_additive",
+    "runs_test_randomness",
+    "mannwhitney_u_value_drift",
+    # round-4 additions with count*count lanes (the dedup family runs
+    # under ``salt:10`` instead, see _WHY_SALT)
+    "t_closeness_audit",
+    "ab_srm_check",
+    # round-9 additions: cnt*tot cross products (TVD numerator grows
+    # FACTOR^2 under replication), budget*n_toks quotient lanes, and
+    # the y*2^19 EWMA headroom (y grows FACTOR-fold).
+    "docs_language_mix_shift",
+    "mix_epoch_schedule",
+    "ewma_k20_daily_revenue",
+    # round-10 additions: r1/r2-era integer lanes designed before the
+    # 128-bit-moment conventions, re-verified at 10x as the rotation
+    # re-samples them. agg_variance_exact and token_simpson_diversity
+    # carry n*sum(x^2) - sum(x)^2 / sum(n*n) quadratic moments in
+    # int64; the others are money-cents sum lanes whose headroom
+    # claims were written at sf0.1.
+    "agg_variance_exact",
+    "token_simpson_diversity",
+    "pricing_summary",
+    "window_running_total",
+    "source_tvd_shift",
+    "q14_promo_revenue",
+    "events_ohlc_hourly",
+    # round-11 additions: the r02-era rotation rows with integer
+    # sum/count lanes written before the 128-bit-moment conventions —
+    # money-cents sums (q17, the range frame, the IVM view),
+    # count*count cardinality products (the join estimator's n_l*n_r
+    # grows FACTOR^2 under replication), permille/rank*freq quotient
+    # lanes (gate report, Zipf), and the KLL replay's rank arithmetic.
+    "q17_small_quantity_revenue",
+    "window_time_range_frame",
+    "ivm_append_agg_view",
+    "events_tumbling_window",
+    "join_cardinality_estimate",
+    "curation_gate_report",
+    "zipf_rank_frequency",
+    "sketch_percentile_drift",
+)
+
+#: ...plus the ANN-serving cohort (the round-5 rows-only conversions
+#: and the k-means family they lean on). For query-batch-bounded
+#: probes the key-offset replication IS the honest scale test: the
+#: corpus grows FACTOR-fold while the probe batch stays the fixed
+#: base-id set, so the run checks cross-engine determinism on the
+#: bigger corpus with probe-candidate volume growing linearly with
+#: bucket occupancy, never quadratically. Pair queries over embeddings
+#: (``embedding_neardup_pairs``) stay OUT for the dedup family's
+#: reason: identical replica vectors collide in every band, so the
+#: pair set explodes quadratically by construction — not a scale
+#: signal. k-means at FACTOR-x replication is a fixed point (the
+#: floor-mean of a FACTOR-replicated member set equals the base mean)
+#: with FACTOR-fold integer momentum lanes — an overflow-headroom
+#: check on the micro sums.
+_ANN_QUERIES = (
+    "ann_lsh_topk",
+    "ann_lsh_multiprobe_topk",
+    "cosine_topk_bruteforce",
+    "cms_token_count_estimates",
+    "kmeans_lloyd_centroids",
+    "kmeans_cluster_profile",
+)
+
+#: ``salt:10``'s default queries: the dedup family. A bijective
+#: per-replica token renaming preserves token-set sizes and
+#: intersections, so within-replica similarity — and hence near-dup
+#: density — is exactly the base corpus's, while replica vocabularies
+#: are pairwise disjoint, so no cross-replica shingle, band,
+#: fingerprint or prefix ever collides (every operator here tokenizes
+#: by space-split). SimHash and winnowing are not renaming-invariant:
+#: their fingerprints hash the renamed tokens (SimHash's plane
+#: geometry, winnowing's window minima), so per-replica pair counts
+#: vary and only their cross-engine agreement is under test.
+_DEDUP_QUERIES = (
+    "dedup_exact_keep_first",
+    "ngram_jaccard_neardup",
+    "minhash_lsh_neardup",
+    "simhash_neardup_pairs",
+    "winnowing_neardup_pairs",
+    "setsim_prefix_join",
+)
+
+
 _SHAPE_PARTS = 3
 
 
@@ -463,6 +651,8 @@ class Kind:
     why: str
     #: also compare pandas dtype families (the driver's lane)
     dtype_gate: bool = False
+    #: the queries run when ``--only`` is absent; empty: the registry
+    queries: tuple[str, ...] = ()
 
 
 _WHY_NULL = """\
@@ -574,6 +764,32 @@ query's values are a pure function of the DATA — the property the
 exact-integer-lane design exists to guarantee. Proof: the layouts
 differ in both lineitem scan splits and shuffle parallelism."""
 
+_WHY_SCALE = """\
+Both real determinism bugs in round 3 (``item_cf_similarity``'s pico
+lane passing int64, ``autocorrelation_daily_revenue``'s int128->double
+ulp split) were invisible below sf0.1 and surfaced only one SF up, and
+there is no sf1 fixture. ``scale:10`` manufactures the overflow
+regime: every fact table is replicated ten times with offset surrogate
+keys and untouched values, so counts and summed moments grow 10-fold
+and count*count products 100-fold — exactly the int64-passing regime;
+dimensions are copied as-is. Its default queries are the 128-bit-lane
+cohort and the ANN-serving cohort. Proof: each fact table has exactly
+10x its source rows and distinct keys, every replica line item has its
+order, and every dimension keeps its rows."""
+
+_WHY_SALT = """\
+Key-offset replication is wrong for the dedup family: every document
+becomes 10-fold duplicated, so pair joins explode quadratically by
+construction. ``salt:10`` scales the corpus honestly: documents are
+replicated ten times with offset doc ids, replica i >= 1 renames every
+space-split token t to t_r<i> (n_chars recomputed), and the other
+tables are copied as-is. Volume grows 10-fold at constant near-dup
+density and no pair may cross replicas. Its default queries are the
+dedup cohort. Proof: documents has exactly 10x its source rows, doc
+ids and distinct tokens (the replica vocabularies are disjoint), n_chars
+equals length(text) on every row, and every other table keeps its
+rows."""
+
 KINDS: dict[str, Kind] = {
     "identity": Kind(
         stage=lambda sf_dir, spark=None, cpus=None: (sf_dir, {}),
@@ -599,6 +815,14 @@ KINDS: dict[str, Kind] = {
                     _WHY_TZ),
     "unicode": Kind(_copy_stage(_unicode_transform, _unicode_prove),
                     _unicode_ok, "oracle", _WHY_UNICODE),
+    "scale:10": Kind(
+        _replicate_kind(10, _FACTS, {}, {}, _SCALE_ZERO),
+        _replicate_ok, "oracle", _WHY_SCALE,
+        queries=_OVERFLOW_QUERIES + _ANN_QUERIES),
+    "salt:10": Kind(
+        _replicate_kind(10, ("documents",), _SALT_EXPRS, _SALT_SCALED,
+                        _SALT_ZERO),
+        _replicate_ok, "oracle", _WHY_SALT, queries=_DEDUP_QUERIES),
     "shape": Kind(_shape_stage, _shape_ok, "source", _WHY_SHAPE),
     "layout": Kind(_layout_stage, _layout_ok, "layout", _WHY_LAYOUT),
 }
@@ -748,8 +972,8 @@ def main() -> int:
     ap.add_argument("--tag", default=None,
                     help="artifact name; default <kind>_<sfbase>_<pid>")
     ap.add_argument("--only", default=None,
-                    help="comma-separated query names (default: all "
-                         "registered)")
+                    help="comma-separated query names (default: the "
+                         "kind's own set, else all registered)")
     ap.add_argument("--cpus", type=int, default=default_parallelism())
     ap.add_argument("--skip-dtypes", action="store_true",
                     help="skip the identity kind's pandas dtype-family "
@@ -785,7 +1009,14 @@ def main() -> int:
     print(f"replica: {replica}", flush=True)
     print(f"perturbation proof -> {'OK' if perturbed else 'VACUOUS'} "
           f"({json.dumps(proof, default=str)})", flush=True)
-    con = duckdb.connect()
+    # DuckDB's default limit (80% of RAM) ignores the Spark driver JVM
+    # beside it, so DuckDB gets half of that. At 40% of 16 GB the
+    # heaviest twin seen (setsim_prefix_join's all-pairs join on
+    # salt:10 at sf0.1) peaks at 6.9 GB instead of growing past what
+    # the host has left; kcore_decomposition's twin reports out of
+    # memory under a 3.7 GB limit even at sf0.001.
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    con = duckdb.connect(config={"memory_limit": f"{ram * 2 // 5 >> 20}MB"})
     if kind.reference == "oracle":
         register_duck_views(con, replica)
 
@@ -795,7 +1026,7 @@ def main() -> int:
             f"SELECT * FROM ({operators.ORACLES[victim]}) LIMIT 1")
         args.only = victim
     names = (args.only.split(",") if args.only
-             else list(operators.ordered_queries()))
+             else list(kind.queries or operators.ordered_queries()))
 
     base = {"tag": tag, "sf": args.sf, "replica": args.replica}
 
