@@ -129,20 +129,19 @@ def _pair_counts(cat: Catalog) -> DataFrame:
     on. Pairs are generated per order from the basket-set array (a
     narrow k² explode of ≤7-element int arrays, whole-stage codegen'd)
     instead of the corpus self-join; counts aggregate map-side to the
-    |brands|² pair grain, where two broadcast dictionary joins restore
-    the strings. bid order == string order, so src < dst is unchanged."""
-    dim = _brand_dim(cat)
+    |brands|² pair grain, where one broadcast map<bid, p_brand> row
+    restores the strings (the ``item_cf_similarity`` shape: the
+    dictionary, a ``part`` scan, is derived once, not per pair side).
+    bid order == string order, so src < dst is unchanged."""
     sets = _basket_sets(cat)
     ex = (sets.select(F.explode("bs").alias("sid"), "bs")
           .select("sid", F.explode("bs").alias("did"))
           .filter(F.col("sid") < F.col("did")))
     cnt = ex.groupBy("sid", "did").agg(F.count(F.lit(1)).alias("n_cooccur"))
-    da = F.broadcast(dim.select(F.col("bid").alias("sid"),
-                                F.col("p_brand").alias("src")))
-    db = F.broadcast(dim.select(F.col("bid").alias("did"),
-                                F.col("p_brand").alias("dst")))
-    return (cnt.join(da, "sid").join(db, "did")
-            .select("src", "dst", "n_cooccur"))
+    b = F.broadcast(_brand_dim(cat).agg(F.map_from_entries(
+        F.collect_list(F.struct("bid", "p_brand"))).alias("b")))
+    return cnt.crossJoin(b).selectExpr("b[sid] AS src", "b[did] AS dst",
+                                       "n_cooccur")
 
 
 def _undirected_edges(cat: Catalog) -> DataFrame:
@@ -363,6 +362,36 @@ def _bfs_oracle() -> str:
     """
 
 
+def _relax(hops: DataFrame, d: DataFrame, rounds: int,
+           by: tuple[str, ...] = ()) -> DataFrame:
+    """``rounds`` min-plus relaxation steps of the distance relation
+    ``d`` (*by, node, dist) over ``hops`` (src, dst, w): each round is
+    hops ⋈ d on src = node, grouped on (*by, dst), min(dist + w).
+    ``d`` holds reached rows only, and ``hops`` carries a weight-0
+    self-loop per node that brings each node's own distance forward,
+    so a round reads ``d`` once and the rounds compose lazily into one
+    plan with no per-round checkpoint. After k rounds ``d`` holds
+    every node reachable in <= k hops with its cheapest such cost.
+    ``hops`` is edge-list sized and broadcast once for every round
+    (faster than broadcasting ``d`` or no hint at sf0.1, PERF.md "One
+    min-plus relaxation step")."""
+    b = F.broadcast(hops)
+    for _ in range(rounds):
+        d = (b.join(d, F.col("src") == F.col("node"))
+             .groupBy(*by, F.col("dst").alias("node"))
+             .agg(F.min(F.col("dist") + F.col("w")).alias("dist")))
+    return d
+
+
+def _hops(edges: DataFrame, nodes: DataFrame, w) -> DataFrame:
+    """(src, dst, w) for ``_relax``: every edge at weight ``w`` (a
+    column of ``edges``) plus a weight-0 self-loop per node."""
+    return (edges.select("src", "dst", w.cast("long").alias("w"))
+            .unionByName(nodes.select(F.col("node").alias("src"),
+                                      F.col("node").alias("dst"),
+                                      F.lit(0).cast("long").alias("w"))))
+
+
 @query("bfs_brand_distances", oracle=_bfs_oracle())
 def bfs_brand_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fixed-depth BFS: minimum hop count from the lexicographically
@@ -373,37 +402,23 @@ def bfs_brand_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     lets an unrolled-CTE oracle verify an iterative traversal exactly
     (hop counts are integers; min is order-free; nothing floats).
 
-    Each round is one join(frontier, edges on src) + groupBy(dst) min
-    + left-join back — the same per-round shuffle shape as PageRank,
-    and the same scale story (partition by dst, AQE for hub skew).
-    ``least`` keeps settled distances monotone, so rounds are
-    idempotent once converged; for unbounded diameters you iterate
-    with the connected-components convergence machinery instead of a
-    fixed unroll.
+    The rounds are ``_relax`` at w = 1: one join(hops, d on src) +
+    groupBy(dst) min per round, the same per-round shuffle shape as
+    PageRank (partition by dst, AQE for hub skew), composed lazily
+    with no per-round checkpoint; one final nodes ⟕ d restores NULL
+    for unreached nodes. For unbounded diameters you iterate with the
+    connected-components convergence machinery instead of a fixed
+    unroll.
     """
     cat = Catalog(spark, sf_dir)
     edges = _directed_edges(cat).localCheckpoint(eager=False)
-    nodes = (edges.select(F.col("src").alias("node")).distinct()
-             .localCheckpoint(eager=False))
-    src = nodes.agg(F.min("node").alias("s"))
-    d = (nodes.crossJoin(F.broadcast(src))
-         .select("node", F.when(F.col("node") == F.col("s"), F.lit(0))
-                 .cast("long").alias("dist")))
-    for _ in range(BFS_DEPTH):
-        reach = (edges.join(F.broadcast(d.filter(F.col("dist").isNotNull())),
-                            F.col("node") == edges.src)
-                 .groupBy(F.col("dst").alias("node"))
-                 .agg(F.min("dist").alias("reach")))
-        # Lazy checkpoint per round: d is referenced twice per round
-        # (frontier + relax join), so unchecked lineage DOUBLES per
-        # round. The frontier/relax relations are |V|-sized at any SF,
-        # so they broadcast (guide §3.1 — see the PageRank note).
-        d = (d.join(F.broadcast(reach), "node", "left")
-             .select("node", F.least(F.col("dist"),
-                                     F.col("reach") + 1).alias("dist"))
-             .localCheckpoint(eager=False))
-    return (d.select(F.col("node").alias("brand"),
-                     F.col("dist").alias("hops"))
+    nodes = edges.select(F.col("src").alias("node")).distinct()
+    seed = nodes.agg(F.min("node").alias("node"),
+                     F.lit(0).cast("long").alias("dist"))
+    d = _relax(_hops(edges, nodes, F.lit(1)), seed, BFS_DEPTH)
+    return (nodes.join(d, "node", "left")
+            .select(F.col("node").alias("brand"),
+                    F.col("dist").alias("hops"))
             .orderBy(F.asc_nulls_last("hops"), "brand"))
 
 
@@ -526,42 +541,27 @@ def sssp_weighted_brands(spark: SparkSession, sf_dir: str) -> DataFrame:
     <= k edges — the declared contract that makes the unrolled-CTE
     oracle exact; unreached nodes stay NULL.
 
-    Per round: join(settled frontier, edges on src) → groupBy(dst)
-    MIN → left-join back — one shuffle keyed by dst, identical scale
-    shape to PageRank/BFS (AQE handles hub skew; costs are integers
-    so MIN is order-free and bit-stable). Bellman-Ford is the
-    distributed SSSP of choice because relaxation is a commutative
-    monoid aggregation — no priority queue to serialize — and
-    composes with the same salted-hub remedy as every other round.
+    The rounds are ``_relax`` at w = cost, the BFS plan with another
+    weight: one shuffle per round keyed by dst (AQE handles hub skew;
+    costs are integers so MIN is order-free and bit-stable). Bellman-
+    Ford is the distributed SSSP of choice because relaxation is a
+    commutative monoid aggregation — no priority queue to serialize —
+    and composes with the same salted-hub remedy as every other round.
     """
     cat = Catalog(spark, sf_dir)
-    # Each relaxation round references the edge relation; a lazy
-    # localCheckpoint materializes the basket-join derivation once
-    # (GraphX cache-the-edges discipline). Under AQE it is not job-free:
-    # asking for the checkpoint's RDD runs the shuffle and broadcast
-    # stages beneath it while the query is built (23 build jobs with
-    # the round checkpoints, tests/test_build_jobs.py).
+    # Every round reads the edge relation; a lazy localCheckpoint
+    # materializes the basket-join derivation once (GraphX cache-the-
+    # edges discipline). Under AQE it is not job-free: asking for the
+    # checkpoint's RDD runs the shuffle and broadcast stages beneath it
+    # while the query is built (tests/test_build_jobs.py).
     edges = _weighted_edges(cat).localCheckpoint(eager=False)
     nodes = edges.select(F.col("src").alias("node")).distinct()
-    src = nodes.agg(F.min("node").alias("s"))
-    d = (nodes.crossJoin(F.broadcast(src))
-         .select("node", F.when(F.col("node") == F.col("s"), F.lit(0))
-                 .cast("long").alias("dist")))
-    for _ in range(SSSP_ROUNDS):
-        reach = (edges.join(F.broadcast(d.filter(F.col("dist").isNotNull())),
-                            F.col("node") == edges.src)
-                 .groupBy(F.col("dst").alias("node"))
-                 .agg(F.min(F.col("dist") + F.col("cost")).alias("reach")))
-        # Same round shape as BFS: per-round lazy checkpoint bounds the
-        # doubly-referenced lineage (the before-plan carried 63
-        # exchanges for 4 rounds); |V|-sized relations broadcast
-        # (guide §3.1 — see the PageRank note).
-        d = (d.join(F.broadcast(reach), "node", "left")
-             .select("node",
-                     F.least(F.col("dist"), F.col("reach")).alias("dist"))
-             .localCheckpoint(eager=False))
-    return (d.select(F.col("node").alias("brand"),
-                     F.col("dist").alias("path_cost"))
+    seed = nodes.agg(F.min("node").alias("node"),
+                     F.lit(0).cast("long").alias("dist"))
+    d = _relax(_hops(edges, nodes, F.col("cost")), seed, SSSP_ROUNDS)
+    return (nodes.join(d, "node", "left")
+            .select(F.col("node").alias("brand"),
+                    F.col("dist").alias("path_cost"))
             .orderBy(F.asc_nulls_last("path_cost"), "brand"))
 
 
@@ -677,17 +677,21 @@ KCORE_K = 5
 
 def _kcore_round_sql(eprev: str, dprev: str, r: int) -> str:
     """One DuckDB peel: remove sub-K nodes, induce the subgraph,
-    recompute degrees over the survivors (absent = 0)."""
+    recompute degrees over the survivors (absent = 0). Every CTE is
+    MATERIALIZED: a round reads the previous round's CTEs twice, and
+    DuckDB 1.0 inlines a plain CTE at each reference, so the inlined
+    plan grows exponentially with the rounds (over 3.7 GB at sf0.001,
+    spilling until the disk filled at sf0.1)."""
     return f"""
-    rem{r} AS (
+    rem{r} AS MATERIALIZED (
         SELECT node FROM {dprev} WHERE deg < {KCORE_K}
-    ), s{r} AS (
+    ), s{r} AS MATERIALIZED (
         SELECT node FROM {dprev} WHERE deg >= {KCORE_K}
-    ), e{r} AS (
+    ), e{r} AS MATERIALIZED (
         SELECT e.src, e.dst FROM {eprev} e
         JOIN s{r} a ON e.src = a.node
         JOIN s{r} b ON e.dst = b.node
-    ), d{r} AS (
+    ), d{r} AS MATERIALIZED (
         SELECT s.node, CAST(COALESCE(c.c, 0) AS BIGINT) AS deg
         FROM s{r} s LEFT JOIN (
             SELECT src AS node, COUNT(*) AS c FROM e{r} GROUP BY src
@@ -723,7 +727,7 @@ def _kcore_peel_round(edges: DataFrame, deg: DataFrame,
     "kcore_decomposition",
     oracle=f"""
     WITH {_P75_EDGES_SQL},
-    d0 AS (
+    d0 AS MATERIALIZED (
         SELECT src AS node, CAST(COUNT(*) AS BIGINT) AS deg
         FROM edges GROUP BY src
     ),{_kcore_round_sql('edges', 'd0', 1)},
@@ -1238,32 +1242,18 @@ def graph_eccentricity_diameter(spark: SparkSession,
     back as a column. On million-node graphs you sample sources or
     run HADI/ANF sketches instead — this operator is the exact
     small-graph tier.
+
+    The rounds are ``_relax`` keyed by source, seeded with (source,
+    source, 0) per node; the distance relation holds reached rows
+    only, so ``count(dist)`` needs no join back to the node set.
     """
     cat = Catalog(spark, sf_dir)
     edges = _directed_edges(cat).localCheckpoint(eager=False)
-    nodes = (edges.select(F.col("src").alias("node")).distinct()
-             .localCheckpoint(eager=False))
-    d = (nodes.select(F.col("node").alias("source"))
-         .crossJoin(F.broadcast(nodes))
-         .select("source", "node",
-                 F.when(F.col("source") == F.col("node"), F.lit(0))
-                 .cast("long").alias("dist")))
-    for _ in range(BFS_DEPTH):
-        reach = (d.filter(F.col("dist").isNotNull())
-                 .join(F.broadcast(edges), d.node == edges.src)
-                 .groupBy("source", F.col("dst").alias("node"))
-                 .agg(F.min("dist").alias("reach")))
-        # Lazy checkpoint per round: the |V|² distance relation's
-        # lineage otherwise doubles each round and Catalyst re-plans
-        # the whole stack at every reference (measured 7.5s at sf0.01,
-        # planning-bound) — the CC/MMR checkpoint discipline. The edge
-        # list and the |V|²-bounded relax relation broadcast (guide
-        # §3.1 — both vocabulary-bounded at any SF).
-        d = (d.join(F.broadcast(reach), ["source", "node"], "left")
-             .select("source", "node",
-                     F.least(F.col("dist"),
-                             F.col("reach") + 1).alias("dist"))
-             .localCheckpoint(eager=False))
+    nodes = edges.select(F.col("src").alias("node")).distinct()
+    seed = nodes.select(F.col("node").alias("source"), "node",
+                        F.lit(0).cast("long").alias("dist"))
+    d = _relax(_hops(edges, nodes, F.lit(1)), seed, BFS_DEPTH,
+               by=("source",))
     ecc = (d.groupBy(F.col("source").alias("brand"))
            .agg(F.max("dist").alias("eccentricity"),
                 F.count("dist").alias("n_reached")))

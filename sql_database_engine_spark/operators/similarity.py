@@ -647,17 +647,7 @@ def connected_components(edges: DataFrame,
                  | (F.coalesce(F.col("p_label"), F.col("cluster_id"))
                     < F.col("cluster_id"))).alias("__changed"))
         ).localCheckpoint()
-        # Free the superseded round's checkpoint blocks immediately
-        # instead of waiting for the GC-driven ContextCleaner — keeps
-        # the block manager at ≤2 live label snapshots however many
-        # rounds run.
-        prev = labels
         labels = updated.drop("__changed")
-        if prev is not None and hasattr(prev, "unpersist"):
-            try:
-                prev.unpersist()
-            except Exception:
-                pass
         if (r + 1) % check_every == 0 or r == max_rounds - 1:
             if updated.filter(F.col("__changed")).limit(1).count() == 0:
                 break

@@ -390,6 +390,23 @@ def test_pagerank_rounds_are_hash_joins(spark):
     assert "CartesianProduct" not in plan
 
 
+def test_pair_counts_restores_brands_from_one_map_row(spark):
+    """``graph._pair_counts``, the edge relation every graph operator
+    checkpoints, scans ``part`` three times: twice in the basket sets
+    (brand dictionary, partkey → brand) and once for the broadcast
+    map<bid, p_brand> row that restores both pair sides. A dictionary
+    join per side made it four. The callers' checkpoints hide this
+    plan from the registry scan audit, so it is pinned here."""
+    import re
+
+    from sql_database_engine_spark.catalog import Catalog
+    from sql_database_engine_spark.operators.graph import _pair_counts
+
+    df = _pair_counts(Catalog(spark, SF_SMOKE))
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert len(re.findall(r"/part\.parquet", plan)) == 3, plan
+
+
 def test_triangle_orientation_keeps_equi_joins(spark):
     plan = _plan(spark, "triangle_count_brands")
     assert "CartesianProduct" not in plan

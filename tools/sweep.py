@@ -1013,8 +1013,9 @@ def main() -> int:
     # beside it, so DuckDB gets half of that. At 40% of 16 GB the
     # heaviest twin seen (setsim_prefix_join's all-pairs join on
     # salt:10 at sf0.1) peaks at 6.9 GB instead of growing past what
-    # the host has left; kcore_decomposition's twin reports out of
-    # memory under a 3.7 GB limit even at sf0.001.
+    # the host has left. kcore_decomposition's twin materializes its
+    # peel CTEs and runs at sf0.1 under a 2 GB limit (inlined, it
+    # needed more than 3.7 GB at sf0.001).
     ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
     con = duckdb.connect(config={"memory_limit": f"{ram * 2 // 5 >> 20}MB"})
     if kind.reference == "oracle":
